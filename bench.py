@@ -32,115 +32,51 @@ HEADLINE = [
     "json_extract_events",
     # contracts
     "documents_contract_report",
-    # LLM-pipeline extensions
+    # LLM-pipeline extensions and the rest of the active tier
     "corpus_vocab_topk",
     "corpus_dup_ngram_stats",
     "pack_training_sequences",
     "doc_gopher_quality_gate",
     "tfidf_top_terms",
     "corpus_curation_pipeline",
-    # (dedup_exact_keep_first retired in the r13 second rotation —
-    # funded the tar-shard container promotion)
     "dedup_repeated_spans",
     "decontaminate_docs",
     "ngram_jaccard_near_dups",
     "minhash_lsh_near_dups",
-    # (simhash_by_doc retired in the r13 second rotation — funded the
-    # NFC canonical-key promotion)
-    # r13 second rotation promotions: the session's two new tiers take
-    # driver slots and bench rows (coverage policy: newest first)
     "tar_shard_corpus_roundtrip",
     "nfc_canonical_dedup",
-    # (embedding_near_dup_pairs retired r13 — see the r13 rotation note)
     "embedding_near_dup_lsh_planted",
     "ann_lsh_top1_planted",
-    # r6 second-continuation promotion (rotation policy; the other
-    # promotion, near_dup_quality_keep, is iterative and so pinned via
-    # ITERATIVE_LINEAGE_PINS rather than benched — the
-    # near_dup_doc_clusters precedent)
     "suppliers_sole_returned",
-    # r7 rotation promotions: never-slotted r6 families now hold active
-    # driver slots, so the bench measures them too (quality_percentile_
-    # filter and label_centroid_similarity retired to fund the slots).
-    # part_golden_records is also promoted but iterative (transitive
-    # closure), so it is pinned via ITERATIVE_LINEAGE_PINS rather than
-    # benched — the near_dup_quality_keep precedent.
     "bloom_pruned_urgent_revenue",
     "boilerplate_line_removal",
-    # (doc_hash_embedding retired r12 — see the r12 rotation note)
-    # r8 rotation (VERDICT r7 #1/#3): the two rows-only actives
-    # (embedding_near_dup_lsh, semantic_dedup_embeddings) rotated to
-    # the retired tier with four three-round-stable queries
-    # (last_order_asof_event, lineitem_grouping_sets,
-    # open_lineitems_per_day, user_funnel_view_click_purchase); the
-    # six promoted hash-oracled queries take their headline places.
     "semantic_dedup_planted",
     "bm25_doc_retrieval",
     "hybrid_bm25_cosine_rrf",
-    # (user_next_event_pairs retired r13 — see the r13 rotation note)
     "user_decayed_engagement",
     "perceptual_near_dup_planted",
-    # r9 rotation (VERDICT r8 #1/#6): doc_embedding_profile,
-    # domain_mixture_epochs and user_event_cms_counts retired (all
-    # multi-round stable, still oracle-verified in the retired sweeps);
-    # the three promoted hash-oracled queries take their places.
     "ann_ivfpq_top1_planted",
-    # r10 rotation (VERDICT r9 #7): knn_cosine_bruteforce (stable since
-    # r1; its exact broadcast-query tier rides inside the hybrid and
-    # contrastive rows) and ann_ivf_top1_planted (four-round-stable;
-    # the IVF coarse stage rides inside both active IVF-PQ rows)
-    # retired to fund the two promotions: the rerank row is the only
-    # ANN query whose SCORE rides the oracle, the pruned-retrieval row
-    # is the default-on BM25 skew guard's dedicated oracle.
     "ann_ivfpq_rerank_top1_planted",
     "bm25_pruned_retrieval",
-    # r11 rotation (VERDICT r10 #5): contrastive_training_pairs and
-    # token_fertility_by_source retired (both two-round-stable; their
-    # machinery stays driver-exercised in hybrid_bm25_cosine_rrf and
-    # the tfidf/BM25/corpus rows); promoted: the fold-exactness proof
-    # (incremental BM25 index maintenance whose oracle is deliberately
-    # identical to bm25_doc_retrieval) and the TPC-H Q18 breadth shape.
     "bm25_from_folded_index",
     "large_order_customers",
-    # r12 rotation (VERDICT r11 #4): customer_snapshot_diff (six-round-
-    # stable; the CDC family stays benched via customers_apply_cdc and
-    # orders_segment_scd2) and doc_hash_embedding (five-round-stable;
-    # hashing-trick machinery rides the tfidf/BM25 rows) retired;
-    # promoted: the r12-extended URL-keyed dedup tier (userinfo /
-    # percent-escape / dot-port / valueless-tracking rules) and the
-    # quantizer-refresh front door (two-frame snapshot drift).
     "web_url_canonical_dedup",
     "embedding_snapshot_drift",
-    # r13 rotation (VERDICT r12 #5): embedding_near_dup_pairs (active
-    # since r1; exact-cosine machinery stays benched via the planted
-    # LSH, semantic-dedup and hybrid rows) and user_next_event_pairs
-    # (five-round-stable; lead-window machinery rides user_sessions /
-    # user_value_twa_daily) retired; promoted: the end-to-end
-    # crawl-to-corpus flagship (VERDICT r12 #4 — WARC crack -> body
-    # decode -> HTML extract -> robots gate -> URL gate -> canonical
-    # dedup -> domain cap -> quality gate as ONE plan) and the RFC
-    # 9309 robots gate (its r12 12.2s addendum row adjudicated via the
-    # headline's warm passes — VERDICT r12 #3).
     "crawl_to_corpus",
     "robots_url_gate",
-    # r9 headline-coverage close (VERDICT r8 #4): every ACTIVE query is
-    # now benched EXCEPT the documented exclusion rule below —
-    # iterative fixpoint queries (near_dup_quality_keep,
-    # part_golden_records) are pinned via ITERATIVE_LINEAGE_PINS and
-    # not benched (their wall time measures checkpoint materialization
-    # order, not a plan — the near_dup_doc_clusters precedent), and
-    # stream_windowed_conformance executes micro-batches on
-    # construction and is parity-gated in test_streaming instead.
     "multimodal_features",
     "orders_segment_scd2",
     "latest_event_per_user",
     "filter_pushdown",
     "customers_apply_cdc",
-    # (customer_snapshot_diff retired r12 — see the r12 rotation note)
     "user_value_twa_daily",
 ]
 
-# Active queries deliberately not benched (the exclusion rule above):
+# Every active query is benched except these: an iterative fixpoint
+# query's wall time measures checkpoint materialization order, not a
+# plan, so it is pinned via ITERATIVE_LINEAGE_PINS instead (the
+# near_dup_doc_clusters precedent); the streaming query executes
+# micro-batches on construction and is parity-gated in test_streaming.
 BENCH_EXCLUDED_ACTIVE = {
     "near_dup_quality_keep": "iterative fixpoint (ITERATIVE_LINEAGE_PINS)",
     "part_golden_records": "iterative fixpoint (ITERATIVE_LINEAGE_PINS)",
@@ -252,16 +188,17 @@ def should_update_control(
 ) -> bool:
     """Whether this run may replace the committed quiet control
     (artifacts/BENCH_latest_local.json). Refuses when the existing
-    control is at a different sf or core count (r14, VERDICT r13 #3 —
-    the driver's low-core scaling run must never displace the 32-core
-    control), or when this run's best spark canary is >20% slower than
-    the control's (a contended run can add a timestamped artifact but
-    never mutate the quiet control in place)."""
+    control is at a different sf or core count, or records no core
+    count (r14, VERDICT r13 #3 — the driver's low-core scaling run must
+    never displace the 32-core control), or when this run's best spark
+    canary is >20% slower than the control's (a contended run can add
+    a timestamped artifact but never mutate the quiet control in
+    place)."""
     if not old:
         return True
     if old.get("sf") != sf:
         return False  # a smoke run at another SF is no control
-    if old.get("cpus", cpus) != cpus:
+    if old.get("cpus") != cpus:
         return False  # cross-cpus run is no control (r14 guard)
     old_canary = old.get("canary", {})
     old_spark = min(

@@ -125,7 +125,6 @@ def time_decayed_sum(
     ts_col: str = "ts",
     value_col: str = "value",
     half_life_s: float = 30 * 86_400,
-    round_to: int = 6,
 ) -> DataFrame:
     """Exponentially time-decayed sum per key — the recency-weighted
     counter online feature stores keep: ``sum(value * exp(-dt *
@@ -145,7 +144,7 @@ def time_decayed_sum(
     aggregate per key. Each contribution rounds to 12 decimals
     (absorbing libm ``exp`` ulp differences, the repo convention) and
     accumulates in exact DECIMAL; the final sum rounds to
-    ``round_to``. Returns ``keys + (decayed_value, n_events)`` over
+    6 decimals. Returns ``keys + (decayed_value, n_events)`` over
     the non-NULL ``value_col`` rows.
     """
     import math
@@ -168,7 +167,7 @@ def time_decayed_sum(
         ev.crossJoin(F.broadcast(anchor))
         .groupBy(*keys)
         .agg(
-            F.round(F.sum(contrib).cast("double"), round_to).alias(
+            F.round(F.sum(contrib).cast("double"), 6).alias(
                 "decayed_value"
             ),
             F.count(F.lit(1)).alias("n_events"),
@@ -228,7 +227,6 @@ def event_transitions(
     type_col: str = "event_type",
     ts_col: str = "ts",
     id_col: str = "event_id",
-    round_to: int = 6,
 ) -> DataFrame:
     """First-order Markov transition matrix over per-user event
     sequences: for each (current, next) event-type pair, the count and
@@ -241,7 +239,8 @@ def event_transitions(
     transition counts themselves partitioning-dependent. The row
     probability divides each pair count by its current-state total
     IN-PLAN (a window over the |types|^2-row aggregate — the A5
-    no-driver-scalar discipline), rounded for engine portability.
+    no-driver-scalar discipline), rounded to 6 decimals for engine
+    portability.
 
     Scale shape: ONE shuffle keyed on the user (the lead window), then
     a map-side-combinable pair aggregate down to at most |types|^2
@@ -270,6 +269,6 @@ def event_transitions(
         F.round(
             F.col("n_transitions").cast("double")
             / F.sum("n_transitions").over(total).cast("double"),
-            round_to,
+            6,
         ).alias("p_next"),
     )

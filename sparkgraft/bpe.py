@@ -9,7 +9,7 @@ works (HuggingFace tokenizers, SentencePiece):
   vocabulary — is fully distributed (``text.vocabulary``: one tokenize
   pass, skew-free two-phase aggregation);
 - the merge-learning loop runs on the DRIVER over that vocabulary,
-  capped at ``max_vocab_rows`` via a deterministic TakeOrdered (the
+  capped at ``_MAX_VOCAB_ROWS`` via a deterministic TakeOrdered (the
   same bounded-driver-sample design as the IVF trainer: vocabularies
   are ~1e5-1e6 rows whatever the corpus size, and BPE's argmax loop is
   inherently sequential — distributing it buys nothing but shuffle);
@@ -38,6 +38,8 @@ from pyspark.sql import functions as F
 __all__ = ["learn_bpe_merges", "bpe_encode_udf", "bpe_segment_word"]
 
 _EOW = "</w>"
+# driver-side vocabulary cap for the merge-learning loop
+_MAX_VOCAB_ROWS = 100_000
 
 
 def _merge_word(sym: tuple[str, ...], pair: tuple[str, str]) -> tuple[str, ...]:
@@ -58,7 +60,6 @@ def learn_bpe_merges(
     text_col: str = "text",
     id_col: str = "doc_id",
     num_merges: int = 100,
-    max_vocab_rows: int = 100_000,
 ) -> list[tuple[str, str]]:
     """Learn ``num_merges`` BPE merges from the corpus. Returns the
     ranked merge list ``[(left, right), ...]`` — rank order IS
@@ -68,7 +69,7 @@ def learn_bpe_merges(
     (``text.tokens``) with the ``</w>`` end-of-word marker on the last
     character, the original BPE formulation (Sennrich et al., 2016):
     merges never cross word boundaries and a subword knows whether it
-    ends a word. The driver holds only the top ``max_vocab_rows``
+    ends a word. The driver holds only the top ``_MAX_VOCAB_ROWS``
     ``(word, freq)`` rows (deterministic freq-desc/word-asc cut) — the
     documented bounded driver action, NOT a corpus collect.
     """
@@ -77,7 +78,7 @@ def learn_bpe_merges(
     vocab_rows = (
         vocabulary(df, text_col, id_col)
         .orderBy(F.desc("term_freq"), F.asc("word"))
-        .limit(max_vocab_rows)
+        .limit(_MAX_VOCAB_ROWS)
         .collect()
     )
     vocab: dict[tuple[str, ...], int] = {}

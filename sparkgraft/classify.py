@@ -41,19 +41,18 @@ _DEC = "decimal(38,10)"
 def logistic_score(
     features: Mapping[str, float | Column],
     bias: float,
-    scale: int = 6,
 ) -> Column:
     """``sigmoid(bias + sum(w_i * x_i))`` as a single codegen
     expression. ``features`` maps column name (or Column) -> weight.
     NULL in any feature propagates to a NULL score (document could
-    not be featurized — empty text). Rounded to ``scale`` so the
+    not be featurized — empty text). Rounded to 6 decimals so the
     ``exp`` libm difference between engines (<= 1 ulp) can't surface.
     """
     z: Column = F.lit(float(bias))
     for col, w in features.items():
         c = F.col(col) if isinstance(col, str) else col
         z = z + F.lit(float(w)) * c
-    return F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), scale)
+    return F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
 
 
 def train_logistic(
@@ -62,7 +61,6 @@ def train_logistic(
     label_col: str,
     lr: float = 1.0,
     iters: int = 50,
-    l2: float = 0.0,
 ) -> dict:
     """Full-batch logistic regression by gradient descent, distributed
     the only way that scales: the DATA never moves — each iteration
@@ -77,7 +75,7 @@ def train_logistic(
     are excluded (count reported as ``n_skipped``).
 
     Driver work is O(iters * |features|): update
-    ``w -= lr * (grad/n + l2 * w)``. That is the bounded-driver-loop
+    ``w -= lr * (grad/n)``. That is the bounded-driver-loop
     contract — the driver never sees a data row.
 
     Returns ``{"bias", "weights": {col: w}, "n", "n_skipped",
@@ -150,7 +148,7 @@ def train_logistic(
             row = base.agg(*aggs).collect()[0]
             b -= lr * float(row["gb"]) / n
             for j in range(len(cols)):
-                w[j] -= lr * (float(row[f"g{j}"]) / n + l2 * w[j])
+                w[j] -= lr * (float(row[f"g{j}"]) / n)
             loss = float(row["ll"]) / n
         return {
             "bias": b,
@@ -163,7 +161,7 @@ def train_logistic(
         base.unpersist()
 
 
-def _reference_train(X, y, lr=1.0, iters=50, l2=0.0):
+def _reference_train(X, y, lr=1.0, iters=50):
     """Pure-python/numpy twin of ``train_logistic`` for tests: same
     update rule at full double precision (the decimal(38,10) cast in
     the distributed path truncates per-row contributions at 1e-10, so
@@ -182,5 +180,5 @@ def _reference_train(X, y, lr=1.0, iters=50, l2=0.0):
         b -= lr * float(err.sum()) / n
         g = X.T @ err
         for j in range(d):
-            w[j] -= lr * (float(g[j]) / n + l2 * w[j])
+            w[j] -= lr * (float(g[j]) / n)
     return {"bias": b, "weights": list(w), "n": n}

@@ -30,7 +30,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .relational import melt
+from .relational import latest_per_group, melt
 
 __all__ = [
     "melt_spec",
@@ -77,7 +77,6 @@ def verify_events(
     prop_col: str = "prop_name",
     payload_cols: Sequence[str] = ("props",),
     group_cols: Sequence[str] = (),
-    round_pct: int | None = 4,
 ) -> DataFrame:
     """Per ``(group.., event, prop)`` key-presence + value-completeness.
 
@@ -135,11 +134,8 @@ def verify_events(
     # Keep spec pairs with zero observed rows (tiny x tiny broadcast join).
     full = spec_long.join(F.broadcast(agg), [*join_keys, prop_col], "left")
 
-    pct = lambda num: (F.col(num) * 100.0 / F.col("total_records"))  # noqa: E731
-    if round_pct is not None:
-        pct_expr = lambda num: F.round(pct(num), round_pct)  # noqa: E731
-    else:
-        pct_expr = pct
+    def pct(num):
+        return F.round(F.col(num) * 100.0 / F.col("total_records"), 4)
 
     out = (
         full.na.fill(0, subset=["total_records", "keys_not_null_count",
@@ -150,12 +146,12 @@ def verify_events(
                     F.col("total_records") - F.col("keys_not_null_count"))
         .withColumn(
             "value_null_count_percentage",
-            F.when(F.col("total_records") > 0, pct_expr("value_null_count"))
+            F.when(F.col("total_records") > 0, pct("value_null_count"))
             .otherwise(F.lit(0.0)),
         )
         .withColumn(
             "key_null_count_percentage",
-            F.when(F.col("total_records") > 0, pct_expr("key_null_count"))
+            F.when(F.col("total_records") > 0, pct("key_null_count"))
             .otherwise(F.lit(0.0)),
         )
     )
@@ -181,7 +177,6 @@ def verify_pipeline(
     version_col: str = "version",
     event_col: str = "event_name",
     catalog_channel_col: str = "client_name",
-    catalog_version_expr=None,
     payload_cols: Sequence[str] = ("context", "traits", "properties"),
 ) -> DataFrame:
     """End-to-end reference pipeline, all channels at once.
@@ -190,42 +185,25 @@ def verify_pipeline(
     2. melt the wide spec to (channel, version, event, prop) pairs;
     3. restrict the catalog to rows whose channel+version match the
        selected spec version (event_verify.py:42-43) — version extracted
-       via ``catalog_version_expr`` (default ``$.app.version`` from the
-       first payload column, as the reference);
+       from ``$.app.version`` of the first payload column, as the
+       reference;
     4. conformance metrics per (channel, event, prop), stamped with the
        spec version.
     """
-    # r14 (guide §2.3/§2.4, VERDICT r13 #8): latest-version selection as
-    # ONE max window on the spec instead of latest_per_group's
-    # groupBy-max + broadcast join-back — same ties-kept semantics
-    # (rows where version == max(version) per channel), one exchange
-    # instead of an aggregate exchange plus a join, and the saving is
-    # doubled because the spec_long subtree is planned under BOTH of
-    # its consumers (the fan-out broadcast and the zero-fill left
-    # join). The spec is KB-sized by contract (a human-maintained
-    # spec), so a per-channel window is never a skew risk; the
-    # agg+join form stays available as relational.latest_per_group for
-    # genuinely large groups.
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(channel_col)
-    latest = (
-        spec_wide.withColumn("__mx", F.max(version_col).over(w))
-        .where(F.col(version_col) == F.col("__mx"))
-        .drop("__mx")
-    )
+    # the spec is KB-sized by contract (a human-maintained spec), so a
+    # per-channel window is never a skew risk
+    latest = latest_per_group(spec_wide, [channel_col], version_col)
     spec_long = melt_spec(latest, id_cols=list(spec_id_cols), event_col=event_col)
 
-    if catalog_version_expr is None:
-        from .json_ops import extract_path
+    from .json_ops import extract_path
 
-        # scrub OUTSIDE the tainted projection below: nullif's
-        # ``if (x = '') null else x`` would duplicate the parse
-        # textually inside the CASE branch, and the uniform ''->NULL
-        # rule applies identically to the computed attribute
-        catalog_version_expr = extract_path(
-            payload_cols[0], "$.app.version", scrub_empty=False
-        )
+    # scrub OUTSIDE the tainted projection below: nullif's
+    # ``if (x = '') null else x`` would duplicate the parse textually
+    # inside the CASE branch, and the uniform ''->NULL rule applies
+    # identically to the computed attribute
+    catalog_version = extract_path(
+        payload_cols[0], "$.app.version", scrub_empty=False
+    )
     # Parse the version payload ONCE per row. The inner spec join emits
     # a null-key filter on __spec_version, and deterministic filters
     # legally push through PROJECTIONS (alias substitution — exactly
@@ -243,7 +221,7 @@ def verify_pipeline(
     cat = catalog.withColumn(
         "__version",
         F.when(
-            F.rand(42) != F.lit(-1.0), catalog_version_expr.cast("string")
+            F.rand(42) != F.lit(-1.0), catalog_version.cast("string")
         ),
     ).withColumn("__version", F.nullif(F.col("__version"), F.lit("")))
     cat = cat.withColumnRenamed(catalog_channel_col, channel_col) \

@@ -231,8 +231,6 @@ def profile_drift(
     before: DataFrame,
     after: DataFrame,
     columns: Sequence[str] | None = None,
-    null_frac_tol: float = 0.05,
-    distinct_ratio_tol: float = 0.5,
 ) -> DataFrame:
     """Snapshot-over-snapshot drift report — the check a recurring
     pipeline runs BETWEEN :func:`profile_table` calls: yesterday's
@@ -242,9 +240,9 @@ def profile_drift(
     null_frac_after, null_frac_delta, distinct_before, distinct_after,
     distinct_ratio, drifted)``
 
-    where ``drifted`` flags a null-fraction move beyond
-    ``null_frac_tol`` (absolute) or a distinct-count ratio outside
-    ``[distinct_ratio_tol, 1/distinct_ratio_tol]`` — the two cheap
+    where ``drifted`` flags a null-fraction move beyond 0.05
+    (absolute) or a distinct-count ratio outside ``[0.5, 2]`` — the
+    two cheap
     signals that catch a broken extractor (nulls spike) or a key
     collapse / explosion (cardinality jumps) before training sees it.
 
@@ -252,8 +250,8 @@ def profile_drift(
     map-side combinable) joined on the tiny per-column report — the
     drift logic itself never touches the data. The distinct counts are
     the profile's HyperLogLog estimates, so ``distinct_ratio`` is an
-    approximate signal by design (size ``distinct_ratio_tol`` well
-    outside the sketch's ~2% error); null fractions are exact.
+    approximate signal by design (the 0.5 bound sits well outside the
+    sketch's ~2% error); null fractions are exact.
 
     ``columns`` defaults to the columns the two snapshots SHARE (drift
     is only defined for common columns; added/dropped columns are a
@@ -293,9 +291,9 @@ def profile_drift(
         "distinct_after",
         ratio.alias("distinct_ratio"),
         (
-            (F.abs(delta) > F.lit(null_frac_tol))
-            | (ratio < F.lit(distinct_ratio_tol))
-            | (ratio > F.lit(1.0 / distinct_ratio_tol))
+            (F.abs(delta) > F.lit(0.05))
+            | (ratio < F.lit(0.5))
+            | (ratio > F.lit(2.0))
         ).alias("drifted"),
     )
 
@@ -377,11 +375,10 @@ def mad_outliers(
     group_cols: Sequence[str],
     value_col: str,
     id_cols: Sequence[str] | None = None,
-    z_threshold: float = 3.5,
 ) -> DataFrame:
     """Robust per-group outlier detection via the median absolute
     deviation (Iglewicz-Hoaglin modified z-score): a value is
-    anomalous when ``|0.6745 * (v - median) / MAD| > z_threshold``.
+    anomalous when ``|0.6745 * (v - median) / MAD| > 3.5``.
     Mean/stddev z-scores are useless exactly when you need them — the
     outliers you hunt inflate the stddev and hide themselves; the
     median/MAD pair has a 50% breakdown point.
@@ -428,7 +425,7 @@ def mad_outliers(
         "med",
         "mad",
         F.round(F.when(F.col("mad") > 0, z), 6).alias("robust_z"),
-        F.when(F.col("mad") > 0, F.abs(z) > z_threshold)
+        F.when(F.col("mad") > 0, F.abs(z) > 3.5)
         .otherwise(dev_out > 0)
         .alias("is_outlier"),
     )
@@ -441,7 +438,6 @@ def psi_drift(
     lo: float,
     hi: float,
     bins: int = 10,
-    scale: int = 6,
 ) -> DataFrame:
     """Population Stability Index between two snapshots of a numeric
     column — the standard distribution-shift score model-monitoring
@@ -506,10 +502,10 @@ def psi_drift(
         .withColumn("tc", F.sum("nc").over(whole))
     )
     p = F.greatest(
-        F.round(F.col("nb") / F.col("tb"), scale), F.lit(eps)
+        F.round(F.col("nb") / F.col("tb"), 6), F.lit(eps)
     )
     q = F.greatest(
-        F.round(F.col("nc") / F.col("tc"), scale), F.lit(eps)
+        F.round(F.col("nc") / F.col("tc"), 6), F.lit(eps)
     )
     per_bin = joined.select(
         "tb",
@@ -517,7 +513,7 @@ def psi_drift(
         ((p - q) * F.log(p / q)).cast("decimal(38,10)").alias("__term"),
     )
     return per_bin.groupBy("tb", "tc").agg(
-        F.round(F.sum("__term").cast("double"), scale).alias("psi")
+        F.round(F.sum("__term").cast("double"), 6).alias("psi")
     ).select(
         F.col("tb").cast("bigint").alias("n_baseline"),
         F.col("tc").cast("bigint").alias("n_current"),
@@ -530,7 +526,6 @@ def groupwise_ols(
     keys: Sequence[str],
     x_col: str,
     y_col: str,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-group least-squares trend line in ONE aggregate — the trend
     sibling of :func:`numeric_correlations`: for each key group, fit
@@ -544,7 +539,7 @@ def groupwise_ols(
     Σy²) are conditional-sum columns of one map-side-combinable keyed
     aggregate; the closed-form OLS arithmetic runs on the |groups|-row
     result. Sums accumulate in exact DECIMAL, the final arithmetic is
-    double rounded to ``round_to`` — identical under any partitioning
+    double rounded to 6 places — identical under any partitioning
     and reproducible by a SQL oracle. Degenerate groups (n < 2 or zero
     x-variance) yield NULL slope/intercept/r2 via ``try_divide``.
     """
@@ -575,28 +570,26 @@ def groupwise_ols(
     return stats.select(
         *keys,
         F.col("__n").alias("n"),
-        F.round(slope, round_to).alias("slope"),
-        F.round(intercept, round_to).alias("intercept"),
-        F.round(r2, round_to).alias("r2"),
+        F.round(slope, 6).alias("slope"),
+        F.round(intercept, 6).alias("intercept"),
+        F.round(r2, 6).alias("r2"),
     )
 
 
 def key_skew_report(
     df: DataFrame,
     keys: Sequence[str],
-    top_n: int = 10,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-key-column skew diagnostics: ``(key_col, n_rows, n_distinct,
     top1_share, topn_share, entropy)`` — the measurement that decides
     BEFORE a join whether a key needs the salted path: a key whose
     top1_share is a few percent saturates one task under plain hash
-    partitioning (the skew_probe scenario, measured 3.75x), and
-    entropy near ln(n_distinct) certifies a uniform key that needs
-    nothing.
+    partitioning (the round-5 skew probe in BENCH_NOTES.md measured
+    3.75x), and entropy near ln(n_distinct) certifies a uniform key
+    that needs nothing.
 
     Per column: one exact per-value count aggregate (map-side
-    combinable), a TakeOrdered top-N over it (never a full sort), and
+    combinable), a TakeOrdered top-10 over it (never a full sort), and
     a one-row roll-up; columns union into one report. Entropy terms
     ``-p ln p`` round then accumulate in exact DECIMAL (the
     unigram_logprob discipline) so the report is partitioning-stable
@@ -611,7 +604,7 @@ def key_skew_report(
             .groupBy(F.col(key).cast("string").alias("__k"))
             .agg(F.count(F.lit(1)).alias("__c"))
         )
-        top = counts.orderBy(F.desc("__c"), F.asc("__k")).limit(top_n)
+        top = counts.orderBy(F.desc("__c"), F.asc("__k")).limit(10)
         top_sums = top.agg(
             F.max("__c").alias("__top1"), F.sum("__c").alias("__topn")
         )
@@ -634,13 +627,13 @@ def key_skew_report(
                 F.lit(key).alias("key_col"),
                 F.col("__n").alias("n_rows"),
                 F.col("__d").alias("n_distinct"),
-                F.round(F.col("__top1") / F.col("__n"), round_to).alias(
+                F.round(F.col("__top1") / F.col("__n"), 6).alias(
                     "top1_share"
                 ),
-                F.round(F.col("__topn") / F.col("__n"), round_to).alias(
+                F.round(F.col("__topn") / F.col("__n"), 6).alias(
                     "topn_share"
                 ),
-                F.round(F.col("__h"), round_to).alias("entropy"),
+                F.round(F.col("__h"), 6).alias("entropy"),
             )
         )
     return union_all(parts)

@@ -14,8 +14,7 @@ Scale shape: everything pivots on ``explode`` + equi-join — the
 inverted-index pattern. The all-pairs O(n^2) comparison never appears;
 candidate generation is |docs| x shingles (jaccard) or |docs| x bands
 (LSH), and the shuffle key is the shingle/band hash, which AQE
-re-splits if a hot shingle skews (stopword-heavy shingles are capped
-by ``max_df`` document-frequency pruning, the standard trick).
+re-splits if a hot shingle skews.
 
 Cross-engine determinism: every hash whose VALUE reaches an output or
 ordering is md5 (identical hex everywhere), and MinHash minimizes the
@@ -45,7 +44,6 @@ __all__ = [
     "jaccard_pairs",
     "jaccard_pairs_prefix",
     "signature_from_shingles",
-    "minhash_signature",
     "lsh_bands",
     "minhash_near_dups",
     "token_hashes32",
@@ -215,7 +213,6 @@ def duplicated_shingle_stats(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 3,
-    persist_shingles: bool = True,
 ) -> DataFrame:
     """Per-document corpus-duplication profile: of each document's
     DISTINCT word ``k``-shingles, how many occur in at least one OTHER
@@ -244,13 +241,12 @@ def duplicated_shingle_stats(
     sh = _doc_shingles(df, text_col, id_col, k).select(
         "doc_id", F.xxhash64("shingle").alias("shingle")
     )
-    if persist_shingles:
-        # eager + lineage-truncating (r13): the two consumers below are
-        # planned as concurrent AQE stages and raced the cold cache —
-        # see relational.materialize_intermediate
-        from .relational import materialize_intermediate
+    # eager + lineage-truncating (r13): the two consumers below are
+    # planned as concurrent AQE stages and raced the cold cache — see
+    # relational.materialize_intermediate
+    from .relational import materialize_intermediate
 
-        sh = materialize_intermediate(sh)
+    sh = materialize_intermediate(sh)
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
     return (
         sh.join(dfreq, "shingle")
@@ -278,12 +274,10 @@ def jaccard_pairs(
     id_col: str,
     k: int = 3,
     threshold: float = 0.5,
-    max_df: int | None = None,
-    persist_intermediates: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity via shingle inverted index.
 
-    ``persist_intermediates`` caches the per-doc shingle-ARRAY stage
+    The per-doc shingle-ARRAY stage is cached
     (one row per doc), which feeds both the exploded self-join input
     and the ``sizes`` branch. WHAT gets persisted matters: the self-
     join's two sides are identical subtrees that Spark already dedupes
@@ -292,55 +286,41 @@ def jaccard_pairs(
     *different* subtree; uncached it re-runs the tokenizer over the
     corpus per consumer. Persisting the compact array stage keeps the
     ReusedExchange AND kills the re-tokenize — measured 5x end-to-end
-    at sf0.1. Disable if per-doc shingle arrays exceed cluster
-    memory+disk cache.
+    at sf0.1.
 
     ``|A ∩ B|`` comes from the self-join on shingle; ``|A ∪ B|`` =
     |A| + |B| - common. Only pairs sharing >= 1 shingle are ever
-    materialized. ``max_df`` drops shingles appearing in more than
-    that many documents (stop-shingles produce quadratic candidate
-    blowup for near-zero signal — prune before the join).
+    materialized.
 
     Returns ``(doc_a, doc_b, common, size_a, size_b, jaccard)`` with
     ``doc_a < doc_b`` and jaccard rounded to 6.
     """
-    sh_sets = _doc_shingle_sets(df, text_col, id_col, k)
-    if persist_intermediates:
-        from .relational import materialize_intermediate
+    from .relational import materialize_intermediate
 
-        # eager=False (r14, VERDICT r13 #1): the self-join sides share
-        # ONE subtree via ReusedExchange and the only other consumer is
-        # the cheap sizes projection; the driver's quiet bench showed
-        # the r13 eager checkpoint a net loss here (ngram_jaccard
-        # 1.62→1.80s at sf0.1). Lazy persist restores the benched-green
-        # pre-r13 behavior.
-        sh_sets = materialize_intermediate(sh_sets, eager=False)
+    # eager=False (r14, VERDICT r13 #1): the self-join sides share ONE
+    # subtree via ReusedExchange and the only other consumer is the
+    # cheap sizes projection; the driver's quiet bench showed the r13
+    # eager checkpoint a net loss here (ngram_jaccard 1.62→1.80s at
+    # sf0.1). Lazy persist restores the benched-green pre-r13 behavior.
+    sh_sets = materialize_intermediate(
+        _doc_shingle_sets(df, text_col, id_col, k), eager=False
+    )
     # join key = 64-bit hash of the shingle, not the string: halves the
     # shuffle bytes and makes comparisons fixed-width. Engine-internal
     # only — outputs carry counts, never the hashed key. (xxhash64
     # collisions at ~1e-13 for any realistic shingle population.)
     # explode_outer + null filter, not explode: see _doc_shingles — the
     # inferred size()>0 filter would re-run the shingle pipeline below
-    # the exchange when the persist barrier is disabled
+    # the exchange without the persist barrier
     sh = (
         sh_sets.select("doc_id", F.explode_outer("shingles").alias("__shingle_str"))
         .where(F.col("__shingle_str").isNotNull())
         .select("doc_id", F.xxhash64("__shingle_str").alias("shingle"))
     )
-    if max_df is not None:
-        rare = (
-            sh.groupBy("shingle")
-            .agg(F.countDistinct("doc_id").alias("df"))
-            .where(F.col("df") <= max_df)
-            .select("shingle")
-        )
-        sh = sh.join(rare, "shingle")
-        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    else:
-        # set sizes straight off the arrays — no explode+reshuffle pass
-        sizes = sh_sets.select(
-            "doc_id", F.size("shingles").cast("bigint").alias("n_shingles")
-        ).where(F.col("n_shingles") > 0)
+    # set sizes straight off the arrays — no explode+reshuffle pass
+    sizes = sh_sets.select(
+        "doc_id", F.size("shingles").cast("bigint").alias("n_shingles")
+    ).where(F.col("n_shingles") > 0)
 
     a = sh.alias("a")
     b = sh.alias("b")
@@ -374,8 +354,6 @@ def containment_pairs(
     id_col: str,
     k: int = 3,
     threshold: float = 0.8,
-    max_df: int | None = None,
-    persist_intermediates: bool = True,
 ) -> DataFrame:
     """Asymmetric near-dup: shingle CONTAINMENT ``|A∩B| / |A|`` per
     direction, keeping pairs where either direction reaches
@@ -386,23 +364,15 @@ def containment_pairs(
     containment_a 1.0).
 
     Same machinery and scale shape as :func:`jaccard_pairs` (one
-    persisted shingle-array stage, hashed inverted-index self-join,
-    ``max_df`` stop-shingle pruning); only the final score/filter
+    persisted shingle-array stage, hashed inverted-index self-join);
+    only the final score/filter
     differs, and the filter compares the ROUNDED scores so an external
     SQL engine reproduces the kept set exactly.
 
     Returns ``(doc_a, doc_b, common, size_a, size_b, containment_a,
     containment_b)`` with ``doc_a < doc_b``.
     """
-    pairs = jaccard_pairs(
-        df,
-        text_col,
-        id_col,
-        k=k,
-        threshold=0.0,
-        max_df=max_df,
-        persist_intermediates=persist_intermediates,
-    )
+    pairs = jaccard_pairs(df, text_col, id_col, k=k, threshold=0.0)
     cont_a = F.round(F.col("common") / F.col("size_a"), 6)
     cont_b = F.round(F.col("common") / F.col("size_b"), 6)
     return (
@@ -531,14 +501,6 @@ def jaccard_pairs_prefix(
     return _verify_candidate_pairs(candidates, sh_sets, threshold)
 
 
-def minhash_signature(
-    text: Column | str, k: int = 3, num_hashes: int = 16
-) -> Column:
-    """Column-level convenience over ``signature_from_shingles`` (for
-    pipelines prefer the staged form — see minhash_near_dups)."""
-    return signature_from_shingles(word_shingles(text, k), num_hashes)
-
-
 def lsh_bands(signature: Column, num_bands: int, rows_per_band: int) -> Column:
     """Band the signature for LSH: array of ``(band_idx, band_hash)``
     structs where band_hash = md5 of the concatenated band slice. Two
@@ -566,7 +528,6 @@ def minhash_near_dups(
     num_hashes: int = 16,
     num_bands: int = 4,
     threshold: float = 0.5,
-    persist_intermediates: bool = True,
 ) -> DataFrame:
     """MinHash + LSH near-duplicate pairs, exact-Jaccard verified.
 
@@ -577,11 +538,10 @@ def minhash_near_dups(
     filter). At 100 TB the candidate set is ~linear in corpus size for
     sane banding; nothing quadratic exists in the plan.
 
-    ``persist_intermediates`` caches the shingle sets and band table:
-    both feed the plan 2-3 times (self-join sides + verification), and
-    without the cache each branch re-runs tokenize + 16 md5 minhashes
-    over the corpus — measured 2-3x end-to-end. Disable if the corpus
-    shingle table cannot fit cluster memory+disk cache.
+    The shingle sets and band table are cached: both feed the plan 2-3
+    times (self-join sides + verification), and without the cache each
+    branch re-runs tokenize + 16 md5 minhashes over the corpus —
+    measured 2-3x end-to-end.
     """
     from .relational import materialize_intermediate
 
@@ -596,9 +556,9 @@ def minhash_near_dups(
     # showed the r13 eager checkpoints a net loss (minhash_lsh
     # 1.18→1.97s at sf0.1). Lazy persist restores the benched-green
     # pre-r13 behavior.
-    sh_df = _doc_shingle_sets(df, text_col, id_col, k)
-    if persist_intermediates:
-        sh_df = materialize_intermediate(sh_df, eager=False)
+    sh_df = materialize_intermediate(
+        _doc_shingle_sets(df, text_col, id_col, k), eager=False
+    )
     sigs = sh_df.select(
         "doc_id",
         signature_from_shingles(F.col("shingles"), num_hashes).alias("__sig"),
@@ -619,8 +579,7 @@ def minhash_near_dups(
             F.col("b.band_hash").alias("band_hash"),
         )
     )
-    if persist_intermediates:
-        banded = materialize_intermediate(banded, eager=False)
+    banded = materialize_intermediate(banded, eager=False)
 
     a = banded.alias("a")
     b = banded.alias("b")
@@ -725,7 +684,6 @@ def decontaminate(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 8,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Cross-corpus decontamination: flag TRAIN documents that share
     any word ``k``-gram with a held-out EVAL/benchmark corpus — the
@@ -743,11 +701,9 @@ def decontaminate(
     side — it is tokenized in one streaming pass and NEVER shuffled
     before the final per-doc aggregation (map-side combinable). Eval
     corpora are small by nature (benchmarks, not crawls), so the
-    distinct eval (shingle, eval_id) table broadcasts
-    (``broadcast_eval=True``): the contamination join is then a
-    broadcast hash join against every train partition in place. For an
-    unusually large eval side, set ``broadcast_eval=False`` for a
-    plain hash-shuffle equi-join on the shingle string. Short docs
+    distinct eval (shingle, eval_id) table broadcasts: the
+    contamination join is then a broadcast hash join against every
+    train partition in place. Short docs
     follow ``word_shingles`` semantics (< k tokens -> one full-text
     shingle), so tiny eval docs still decontaminate exactly.
     """
@@ -755,10 +711,8 @@ def decontaminate(
     ev = _doc_shingles(eval_df, text_col, id_col, k).select(
         F.col("doc_id").alias("__eval_id"), "shingle"
     )
-    if broadcast_eval:
-        ev = F.broadcast(ev)
     return (
-        tr.join(ev, "shingle")
+        tr.join(F.broadcast(ev), "shingle")
         .groupBy("doc_id")
         .agg(
             F.countDistinct("__eval_id").alias("n_eval_docs"),
@@ -894,7 +848,6 @@ def near_dup_committee(
     id_col: str = "doc_id",
     emb_id_col: str = "vec_id",
     emb_vec_col: str = "embedding",
-    k: int = 3,
     jaccard_threshold: float = 0.2,
     cosine_threshold: float = 0.4,
     hamming_threshold: int = 8,
@@ -929,7 +882,7 @@ def near_dup_committee(
     from .similarity import cosine_pairs_blocked
 
     jac = jaccard_pairs(
-        docs, text_col, id_col, k=k, threshold=jaccard_threshold
+        docs, text_col, id_col, k=3, threshold=jaccard_threshold
     ).select(
         F.col("doc_a"), F.col("doc_b"), F.col("jaccard")
     )
@@ -1180,9 +1133,6 @@ def near_dup_incremental(
     seen_signatures: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 3,
-    num_hashes: int = 16,
-    num_bands: int = 4,
     threshold: float = 0.5,
 ) -> DataFrame:
     """Near-dup dedup of an ARRIVING batch against all of history
@@ -1192,9 +1142,12 @@ def near_dup_incremental(
     document (a few hundred bytes each — the store never holds text
     or shingles), and each run:
 
-    1. computes signatures for the new batch only (the ONLY text pass);
-    2. derives LSH band hashes from BOTH signature sets row-locally
-       (md5 over signature slices — no retokenization of history);
+    1. computes signatures for the new batch only (the ONLY text pass):
+       16 minhashes over word 3-shingles, the ``minhash_near_dups``
+       defaults, so stored signatures stay comparable run to run;
+    2. derives LSH band hashes (4 bands of 4 rows) from BOTH signature
+       sets row-locally (md5 over signature slices — no retokenization
+       of history);
     3. joins new bands to historical bands on ``(band, band_hash)``
        for candidates (uniform hash key, ~linear);
     4. verifies candidates by ESTIMATED Jaccard — the fraction of
@@ -1210,14 +1163,12 @@ def near_dup_incremental(
     NOT resolved here — run ``minhash_near_dups`` on the batch first
     if arrivals can duplicate each other.
     """
-    rows = num_hashes // num_bands
-
     def bands_of(sig_df: DataFrame, label: str) -> DataFrame:
         return (
             sig_df.select(
                 F.col(id_col).alias(label),
                 F.explode_outer(
-                    lsh_bands(F.col("signature"), num_bands, rows)
+                    lsh_bands(F.col("signature"), 4, 4)
                 ).alias("b"),
             )
             .where(F.col("b").isNotNull())
@@ -1229,11 +1180,11 @@ def near_dup_incremental(
         )
 
     new_sigs = (
-        _doc_shingle_sets(new_docs, text_col, id_col, k)
+        _doc_shingle_sets(new_docs, text_col, id_col, 3)
         .where(F.size("shingles") > 0)
         .select(
             F.col("doc_id").alias(id_col),
-            signature_from_shingles(F.col("shingles"), num_hashes).alias(
+            signature_from_shingles(F.col("shingles"), 16).alias(
                 "signature"
             ),
         )
@@ -1274,7 +1225,7 @@ def near_dup_incremental(
                         lambda x: x,
                     )
                 )
-                / F.lit(float(num_hashes))
+                / F.lit(16.0)
             ).alias("est_jaccard"),
         )
     )
@@ -1460,7 +1411,6 @@ def quality_keep(
 def plan_lsh(
     threshold: float,
     num_hashes: int = 16,
-    false_negative_weight: float = 2.0,
 ) -> tuple[int, int]:
     """Choose (num_bands, rows_per_band) for MinHash LSH given a target
     Jaccard threshold — the S-curve math users otherwise eyeball: a
@@ -1469,7 +1419,7 @@ def plan_lsh(
     near ``(1/b)^(1/r)``. Scans every factorization b*r = num_hashes
     and picks the one minimizing the weighted error integral of the
     S-curve against the ideal step at ``threshold`` (missed true pairs
-    weighted ``false_negative_weight`` x over false candidates — a miss
+    weighted 2x over false candidates — a miss
     is silent data corruption, a false candidate just costs one exact
     verification).
 
@@ -1493,7 +1443,7 @@ def plan_lsh(
             s = (i + 0.5) / steps
             p = 1.0 - (1.0 - s**r) ** b
             if s >= threshold:
-                err += false_negative_weight * (1.0 - p)  # missed true pair
+                err += 2.0 * (1.0 - p)  # missed true pair
             else:
                 err += p  # false candidate
         key = (err, b, r)

@@ -240,7 +240,6 @@ def fetch_schedule(
     url_col: str = "url",
     priority_col: str | None = None,
     agent: str = "*",
-    default_delay_sec: float = 1.0,
     connections: int = 1,
 ) -> DataFrame:
     """Serialize the fetch frontier per host: every URL gets a
@@ -259,7 +258,7 @@ def fetch_schedule(
     ``delays`` is per-(host, agent) ``crawl_delay_sec`` rows as
     parsed by ``robots.robots_crawl_delays``; group selection and the
     default follow :func:`effective_delays`. ``None`` means every
-    host gets ``default_delay_sec``. The host key is the URL's
+    host gets the 1-second default. The host key is the URL's
     parse_url host with any explicit ``:port`` stripped — the same
     bare-host keying as ``robots_gate`` (one robots.txt, one
     politeness budget per authority).
@@ -298,16 +297,16 @@ def fetch_schedule(
         "host", F.regexp_replace(p["host"], r":[0-9]+$", "")
     )
     if delays is not None:
-        eff = effective_delays(delays, agent, default_delay_sec)
+        eff = effective_delays(delays, agent)
         tagged = tagged.join(F.broadcast(eff), "host", "left").withColumn(
             "crawl_delay_sec",
             F.coalesce(
-                F.col("crawl_delay_sec"), F.lit(float(default_delay_sec))
+                F.col("crawl_delay_sec"), F.lit(1.0)
             ),
         )
     else:
         tagged = tagged.withColumn(
-            "crawl_delay_sec", F.lit(float(default_delay_sec))
+            "crawl_delay_sec", F.lit(1.0)
         )
     order = (
         [F.col(priority_col).desc_nulls_last(), F.col(url_col).asc()]

@@ -38,18 +38,16 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     weight_col: str | None = None,
-    damping: float = 0.85,
     iters: int = 10,
-    scale: int = 6,
     tol: float | None = None,
 ) -> DataFrame:
     """Weighted PageRank over a directed edge list.
 
     ``rank_{k+1}(v) = (1-d)/N + d * (sum over in-edges (u,v) of
     rank_k(u) * w(u,v) / out_w(u)) + d * dangling_k / N`` — the
-    standard formulation with dangling-node mass (nodes with no
-    out-edges) redistributed uniformly, so ranks sum to 1 every
-    iteration (checked in tests to 1e-6).
+    standard formulation (damping d = 0.85) with dangling-node mass
+    (nodes with no out-edges) redistributed uniformly, so ranks sum to
+    1 every iteration (checked in tests to 1e-6).
 
     The node-count denominator is collected ONCE before the loop (a
     single bounded scalar, the IVF-trainer precedent); everything per
@@ -58,7 +56,7 @@ def pagerank(
     — a 1-row driver probe per iteration, the same documented
     fixpoint-termination exception as connected components; ``iters``
     remains the hard cap either way. Returns ``(node, rank)`` with
-    rank rounded to ``scale`` for engine-portable comparison.
+    rank rounded to 6 places for engine-portable comparison.
     """
     w: Column = F.lit(1.0) if weight_col is None else F.col(weight_col).cast(
         "double"
@@ -88,7 +86,7 @@ def pagerank(
         return edges.sparkSession.createDataFrame([], "node long, rank double")
     outw = e.groupBy("__s").agg(F.sum("__w").alias("__ow")).persist()
 
-    d = float(damping)
+    d = 0.85  # damping
     ranks = nodes.select("node", F.lit(1.0 / n).alias("r")).localCheckpoint()
     try:
         for _ in range(iters):
@@ -148,7 +146,7 @@ def pagerank(
                     break
             else:
                 ranks = new_ranks
-        return ranks.select("node", F.round("r", scale).alias("rank"))
+        return ranks.select("node", F.round("r", 6).alias("rank"))
     finally:
         nodes.unpersist()
         outw.unpersist()

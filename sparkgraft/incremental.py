@@ -68,12 +68,11 @@ def partial_aggregate(
     df: DataFrame,
     keys: Sequence[str],
     specs: Mapping[str, tuple[str, str | None]],
-    sum_scale: int = 2,
 ) -> DataFrame:
     """One batch's keyed partial aggregates: ``specs`` maps each output
     column to ``(kind, column)`` with kind in count / sum / min / max
     (``("count", None)`` counts rows). Sums accumulate in
-    ``DECIMAL(38, sum_scale)`` so later merges are order-independent
+    ``DECIMAL(38, 2)`` so later merges are order-independent
     and engine-exact; cast once at read time if doubles are wanted."""
     _check_specs(specs)
     aggs = []
@@ -82,7 +81,7 @@ def partial_aggregate(
             aggs.append(F.count(F.lit(1)).cast("bigint").alias(out))
         elif kind == "sum":
             aggs.append(
-                F.sum(F.col(col).cast(f"decimal(38,{sum_scale})")).alias(out)
+                F.sum(F.col(col).cast("decimal(38,2)")).alias(out)
             )
         elif kind == "min":
             aggs.append(F.min(col).alias(out))
@@ -125,7 +124,6 @@ def partial_distinct(
     df: DataFrame,
     keys: Sequence[str],
     col: str,
-    lg_k: int = 12,
     sketch_col: str = "distinct_sketch",
 ) -> DataFrame:
     """One batch's keyed HLL sketch states — the sketch that makes
@@ -145,7 +143,7 @@ def partial_distinct(
     lg_k=12); exactness of the MERGE is not approximate.
     """
     return df.groupBy(*keys).agg(
-        F.hll_sketch_agg(F.col(col), F.lit(lg_k)).alias(sketch_col)
+        F.hll_sketch_agg(F.col(col), F.lit(12)).alias(sketch_col)
     )
 
 

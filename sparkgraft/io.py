@@ -122,7 +122,6 @@ def read_partitioned(
     spark: SparkSession,
     root: str,
     partition_filters: dict[str, str] | None = None,
-    schema: StructType | None = None,
 ) -> DataFrame:
     """Partition-pruned Parquet read.
 
@@ -131,10 +130,7 @@ def read_partitioned(
     table root, apply equality filters on the Hive partition columns, and
     let Catalyst prune directories — `.explain` shows ``PartitionFilters``.
     """
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.parquet(root)
+    df = spark.read.parquet(root)
     for col, value in (partition_filters or {}).items():
         df = df.where(F.col(col) == F.lit(value))
     return df
@@ -144,10 +140,10 @@ def read_csv(
     spark: SparkSession,
     path: str,
     schema: StructType | str,
-    header: bool = True,
 ) -> DataFrame:
-    """CSV read with a mandatory explicit schema (no inference — SURVEY §4.2.6)."""
-    return spark.read.csv(path, header=header, schema=schema)
+    """CSV read, header row skipped, with a mandatory explicit schema
+    (no inference — SURVEY §4.2.6)."""
+    return spark.read.csv(path, header=True, schema=schema)
 
 
 def read_jsonl(
@@ -188,12 +184,7 @@ def read_jsonl(
     return reader.json(path)
 
 
-def write_jsonl(
-    df: DataFrame,
-    path: str,
-    partition_by: tuple[str, ...] = (),
-    mode: str = "overwrite",
-) -> None:
+def write_jsonl(df: DataFrame, path: str) -> None:
     """JSON-lines sink — the interchange export (hand a corpus slice to
     a tokenizer trainer or another team's loader). One object per line,
     written in parallel (a directory of part files, like every
@@ -201,7 +192,7 @@ def write_jsonl(
     ``compact_partitions`` or read the directory). NULL-valued fields
     are omitted per line, the JSONL convention ``read_jsonl`` round-trips
     as NULL columns."""
-    _write(df, path, "json", partition_by, mode)
+    _write(df, path, "json", ())
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
@@ -216,11 +207,10 @@ def write_orc(
     df: DataFrame,
     path: str,
     partition_by: tuple[str, ...] = (),
-    mode: str = "overwrite",
 ) -> None:
     """ORC sink, mirroring write_parquet (partitioned directory
     layout, same overwrite semantics)."""
-    _write(df, path, "orc", partition_by, mode)
+    _write(df, path, "orc", partition_by)
 
 
 def _write(
@@ -228,11 +218,11 @@ def _write(
     path: str,
     fmt: str,
     partition_by: tuple[str, ...],
-    mode: str,
 ) -> None:
-    # the one place writer-level behavior (mode, partitioning, future
-    # default options) lives — the format sinks only pick the codec
-    writer = df.write.mode(mode)
+    # the one place writer-level behavior (overwrite, partitioning,
+    # future default options) lives — the format sinks only pick the
+    # codec
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.format(fmt).save(path)
@@ -242,9 +232,8 @@ def write_parquet(
     df: DataFrame,
     path: str,
     partition_by: tuple[str, ...] = (),
-    mode: str = "overwrite",
 ) -> None:
-    _write(df, path, "parquet", partition_by, mode)
+    _write(df, path, "parquet", partition_by)
 
 
 def write_bucketed(
@@ -340,10 +329,11 @@ def write_training_shards(
     return entries
 
 
-def write_single_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_single_csv(df: DataFrame, path: str) -> None:
     """Single-file CSV sink for small final results (reference S7,
-    event_verify.py:230-231). Only safe when the result fits one task."""
-    df.coalesce(1).write.mode(mode).option("header", True).csv(path)
+    event_verify.py:230-231), overwriting ``path``. Only safe when the
+    result fits one task."""
+    df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
 
 
 def overwrite_partitions(
@@ -375,7 +365,6 @@ def compact_partitions(
     src_root: str,
     dest_root: str,
     partition_by: tuple[str, ...],
-    max_records_per_file: int = 1_000_000,
 ) -> None:
     """Small-file compaction: rewrite a partitioned table so each
     partition holds few, large files instead of the thousands of
@@ -386,7 +375,7 @@ def compact_partitions(
     One shuffle keyed on the partition columns co-locates each
     partition's rows into one task (AQE's optimizeSkewsInRebalance
     re-splits partitions too big for one task), and
-    ``maxRecordsPerFile`` caps file size on the way out.
+    ``maxRecordsPerFile`` caps files at 1M rows on the way out.
 
     Writes to ``dest_root`` — never in place: a failed in-place
     compaction loses data, so production compaction always writes new
@@ -397,7 +386,7 @@ def compact_partitions(
     (
         df.repartition(*[F.col(c) for c in partition_by])
         .write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
+        .option("maxRecordsPerFile", 1_000_000)
         .partitionBy(*partition_by)
         .parquet(dest_root)
     )
@@ -433,13 +422,11 @@ def zorder_write(
     path: str,
     zorder_cols: "list[str]",
     num_files: int = 8,
-    bits: int = 16,
-    mode: str = "overwrite",
 ) -> None:
     """Multi-dimensional data clustering on write — the open-source
     shape of Delta Lake's ``OPTIMIZE ZORDER BY`` / Databricks
     liquid clustering, built from public primitives: normalize each
-    clustering column to ``bits``-bit integers by global min/max,
+    clustering column to 16-bit integers by global min/max,
     interleave into a Morton key, ``repartitionByRange`` on that key
     (one range shuffle), sort within partitions, write parquet.
 
@@ -461,7 +448,7 @@ def zorder_write(
         *[F.max(c).alias(f"__hi_{i}") for i, c in enumerate(zorder_cols)],
     ).collect()[0]
     norm = []
-    top = (1 << bits) - 1
+    top = (1 << 16) - 1
     for i, c in enumerate(zorder_cols):
         lo, hi = stats[f"__lo_{i}"], stats[f"__hi_{i}"]
         col = F.col(c).cast("double")
@@ -473,13 +460,13 @@ def zorder_write(
             norm.append(
                 F.least(F.greatest(scaled, F.lit(0)), F.lit(top)).cast("long")
             )
-    key = F.coalesce(zorder_key(norm, bits=bits), F.lit(-1))
+    key = F.coalesce(zorder_key(norm), F.lit(-1))
     (
         df.withColumn("__z", key)
         .repartitionByRange(num_files, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
@@ -568,7 +555,6 @@ def write_bloom_manifest(
     path: str,
     col: str,
     num_bits: int = 1 << 16,
-    num_hashes: int = 3,
 ) -> dict:
     """Write ``_BLOOM_MANIFEST.json`` next to a parquet directory: a
     per-FILE Bloom bitmap of ``col``'s values — the data-skipping
@@ -580,7 +566,7 @@ def write_bloom_manifest(
     Delta offers Bloom filter indexes alongside its min/max stats.
 
     Build is DISTRIBUTED, not a driver scan: ``_metadata.file_path``
-    tags each row with its source file, each value sets ``num_hashes``
+    tags each row with its source file, each value sets 3
     md5-derived bit positions (the repo hash convention — chosen here
     so the READER can recompute probe positions in plain Python
     without a Spark job), and bits pack into 64-bit words via one
@@ -593,7 +579,7 @@ def write_bloom_manifest(
     """
     import json as _json
 
-    seeds = list(range(num_hashes))
+    seeds = list(range(3))
     src = spark.read.parquet(path).select(
         F.col(col).cast("string").alias("__k"),
         F.col("_metadata.file_path").alias("__f"),
@@ -633,7 +619,7 @@ def write_bloom_manifest(
     manifest = {
         "column": col,
         "num_bits": num_bits,
-        "num_hashes": num_hashes,
+        "num_hashes": 3,
         "files": files,
     }
     with open(os.path.join(path, "_BLOOM_MANIFEST.json"), "w") as fh:

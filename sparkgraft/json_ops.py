@@ -73,17 +73,16 @@ def payload_map(payload: Column | str) -> Column:
     return F.from_json(_col(payload), "map<string,string>")
 
 
-def extract_key(
-    payload: Column | str, key: Column | str, scrub_empty: bool = True
-) -> Column:
-    """Extract a *dynamic* (per-row) top-level key from a JSON payload."""
+def extract_key(payload: Column | str, key: Column | str) -> Column:
+    """Extract a *dynamic* (per-row) top-level key from a JSON payload,
+    with the uniform ``'' -> NULL`` rule applied."""
     key_col = F.col(key) if isinstance(key, str) else key
     out = F.try_element_at(payload_map(payload), key_col)
-    return F.nullif(out, F.lit("")) if scrub_empty else out
+    return F.nullif(out, F.lit(""))
 
 
 def multi_path_coalesce(
-    candidates: Sequence[tuple[Column | str, str]], scrub_empty: bool = True
+    candidates: Sequence[tuple[Column | str, str]],
 ) -> Column:
     """First non-null (and non-empty) value across candidate
     ``(payload_column, json_path)`` pairs.
@@ -96,7 +95,7 @@ def multi_path_coalesce(
     if not candidates:
         raise ValueError("multi_path_coalesce needs at least one (column, path)")
     return F.coalesce(
-        *[extract_path(c, p, scrub_empty=scrub_empty) for c, p in candidates]
+        *[extract_path(c, p) for c, p in candidates]
     )
 
 

@@ -108,7 +108,6 @@ def fake_decode_stats(payload: bytes) -> dict[str, Any]:
 def extract_features(
     media: DataFrame,
     decode_fn: Callable[[bytes], dict[str, Any]] = fake_decode_stats,
-    batch_size_hint: int = 256,
 ) -> DataFrame:
     """Decode + featurize via Arrow-batched ``mapInPandas``.
 
@@ -170,7 +169,6 @@ def resize_media(
     media: DataFrame,
     width: int = 8,
     height: int = 8,
-    resize_fn: Callable[[bytes, int, int], bytes] = fake_resize,
 ) -> DataFrame:
     """Resize via Arrow-batched ``mapInPandas`` — the normalization
     stage of an image pipeline (every payload to a fixed target
@@ -178,7 +176,7 @@ def resize_media(
 
     Contract: (media_id, payload) in; ``media_id, width, height,
     payload`` out — the payload REPLACED by its resized form, exactly
-    ``width * height`` bytes under the fake codec, with decode errors
+    ``width * height`` bytes under :func:`fake_resize`, with decode errors
     dead-lettered as NULL payloads rather than failing the job. Same
     batch-shape economics as ``extract_features``: Python cost is
     per-batch, partitioning carries through, and the stage composes
@@ -193,7 +191,7 @@ def resize_media(
             rows = []
             for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
                 try:
-                    out = resize_fn(
+                    out = fake_resize(
                         bytes(payload) if payload is not None else None,
                         width,
                         height,
@@ -287,7 +285,6 @@ def embed_media(media: DataFrame, dim: int = 16) -> DataFrame:
 
 def perceptual_hash(
     media: DataFrame,
-    grid: int = 8,
     resize_fn: Callable[[bytes, int, int], bytes] = fake_resize,
 ) -> DataFrame:
     """Difference-hash (dHash) per payload: the perceptual fingerprint
@@ -295,8 +292,8 @@ def perceptual_hash(
     with different bytes (re-encode, metadata strip, mild recompress)
     hash to nearby values, where the md5 content fingerprint sees two
     unrelated blobs. The algorithm is the public dHash: normalize to a
-    ``(grid+1) x grid`` luminance grid, emit one bit per horizontal
-    neighbor comparison — ``grid^2`` bits (64 at the default).
+    9 x 8 luminance grid, emit one bit per horizontal neighbor
+    comparison — 64 bits.
 
     The decode/normalize step rides the SAME seam as every other
     multimodal operator (``resize_fn``: bytes -> fixed-size bytes —
@@ -312,7 +309,7 @@ def perceptual_hash(
     import numpy as np
     import pandas as pd
 
-    w, h = grid + 1, grid
+    w, h = 9, 8
 
     def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -654,20 +651,21 @@ def wav_decode_stats(payload: bytes) -> dict[str, Any]:
     }
 
 
-def audio_feature_vector(payload: bytes, n_windows: int = 8) -> list[float]:
+def audio_feature_vector(payload: bytes) -> list[float]:
     """Windowed RMS + zero-crossing featurizer over a decoded WAV:
-    the signal splits into ``n_windows`` equal-DURATION segments; each
+    the signal splits into 8 equal-DURATION segments; each
     contributes its RMS amplitude and its zero-crossing rate in Hz
     scaled by 1/20000 (a fixed normalizer, NOT the file's own Nyquist —
     per-second crossings of the same recording are sample-rate
     invariant, so a resampled duplicate lands at the same coordinates
-    while a per-file normalizer would shift them). 2 x n_windows
-    floats; the time envelope + spectral proxy a real featurizer
-    (spectrogram/MFCC) refines behind the same seam."""
+    while a per-file normalizer would shift them). 16 floats; the time
+    envelope + spectral proxy a real featurizer (spectrogram/MFCC)
+    refines behind the same seam."""
     import numpy as np
 
     samples, rate = wav_decode(payload)
     n = samples.size
+    n_windows = 8
     bounds = [(i * n) // n_windows for i in range(n_windows + 1)]
     feats: list[float] = []
     zcrs: list[float] = []
@@ -679,10 +677,10 @@ def audio_feature_vector(payload: bytes, n_windows: int = 8) -> list[float]:
     return feats + zcrs
 
 
-def embed_audio(media: DataFrame, n_windows: int = 8) -> DataFrame:
+def embed_audio(media: DataFrame) -> DataFrame:
     """Real-audio counterpart of :func:`embed_media`: WAV payloads ->
     unit-norm ``array<float>`` of windowed RMS + zero-crossing-rate
-    features (2 x n_windows dims) via the identical Arrow contract —
+    features (16 dims) via the identical Arrow contract —
     one (media_id, embedding) row per payload, undecodable rows
     dead-lettered as NULL. Because the features are duration-relative
     and rate-invariant, a RESAMPLED duplicate of a recording embeds
@@ -702,8 +700,7 @@ def embed_audio(media: DataFrame, n_windows: int = 8) -> DataFrame:
                 try:
                     v = np.asarray(
                         audio_feature_vector(
-                            bytes(payload) if payload is not None else None,
-                            n_windows,
+                            bytes(payload) if payload is not None else None
                         ),
                         dtype=np.float64,
                     )
@@ -2432,11 +2429,11 @@ def exif_app1(orientation: int, byte_order: bytes = b"II") -> bytes:
 
 def jpeg_resize(payload: bytes, width: int, height: int) -> bytes:
     """Real-codec drop-in for :func:`fake_resize` over JPEG (same
-    ``resize_fn`` contract, so :func:`resize_media` and
-    :func:`perceptual_hash` are untouched): decode -> EXIF-orientation
-    normalize (r12 — rotated re-crawls of one page must land on nearby
-    dHashes, not 30+ bits apart) -> nearest-neighbor downsample -> raw
-    luminance bytes, the png_resize convention."""
+    ``resize_fn`` contract, so :func:`perceptual_hash` is untouched):
+    decode -> EXIF-orientation normalize (r12 — rotated re-crawls of
+    one page must land on nearby dHashes, not 30+ bits apart) ->
+    nearest-neighbor downsample -> raw luminance bytes, the png_resize
+    convention."""
     import numpy as np
 
     lum = exif_apply(jpeg_decode(payload), exif_orientation(payload))

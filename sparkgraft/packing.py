@@ -105,8 +105,6 @@ def epoch_replicate(
     key_col: str,
     source_col: str,
     plan: DataFrame,
-    default_full: int = 1,
-    default_extra_thr: str = "0000",
 ) -> DataFrame:
     """Realize a domain-mixture plan by replicating rows per source.
 
@@ -115,7 +113,8 @@ def epoch_replicate(
     ``full_epochs`` times, plus once more iff its 4-hex md5 bucket is
     below ``extra_thr`` (so ``extra_thr='8000'`` realizes a +0.5-epoch
     fractional weight on a deterministic half of the documents, the
-    no-``rand()`` way to hit a 2.5x mixture multiplier).
+    no-``rand()`` way to hit a 2.5x mixture multiplier). A source the
+    plan does not name appears once.
 
     Plan is broadcast; the replication is a row-local
     ``explode(sequence(...))`` — no shuffle at any scale, output size
@@ -123,8 +122,8 @@ def epoch_replicate(
     """
     bucket = hex_bucket(key_col, 4)
     n = (
-        F.coalesce(F.col("full_epochs"), F.lit(default_full))
-        + F.when(bucket < F.coalesce(F.col("extra_thr"), F.lit(default_extra_thr)), 1)
+        F.coalesce(F.col("full_epochs"), F.lit(1))
+        + F.when(bucket < F.coalesce(F.col("extra_thr"), F.lit("0000")), 1)
         .otherwise(0)
     ).cast("bigint")
     return (
@@ -372,8 +371,6 @@ def leakage_safe_split(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    train_hex: str = "cccc",
-    val_hex: str = "e666",
 ) -> DataFrame:
     """Cluster-aware train/val/test assignment — the split a curation
     pipeline must use AFTER dedup decisions exist: bucketing each doc
@@ -387,9 +384,8 @@ def leakage_safe_split(
     One shuffle: the min-per-fingerprint is a window over the
     fingerprint partition (map-side combinable key, uniform md5
     distribution — no skew at any corpus size); the bucket-to-split
-    mapping is row-local. Same md5 hex-bucket thresholds as the
-    document-level splitter, so mixture ratios are preserved in
-    expectation."""
+    mapping is row-local: buckets below ``cccc`` train, below ``e666``
+    val, the rest test — an 80/10/10 split."""
     from pyspark.sql import Window
 
     from .text import fingerprint
@@ -403,8 +399,8 @@ def leakage_safe_split(
             id_col,
             "cluster_id",
             bucket.alias("bucket"),
-            F.when(bucket < F.lit(train_hex), "train")
-            .when(bucket < F.lit(val_hex), "val")
+            F.when(bucket < F.lit("cccc"), "train")
+            .when(bucket < F.lit("e666"), "val")
             .otherwise("test")
             .alias("split"),
         )
@@ -418,7 +414,6 @@ def weighted_sample_exact_k(
     id_col: str = "doc_id",
     strata: "Sequence[str] | None" = None,
     seed: str = "aes:",
-    round_to: int = 9,
 ) -> DataFrame:
     """EXACTLY-k weighted sampling without replacement (Efraimidis &
     Spirakis 2006): each row draws key ``u^(1/w)`` with u a seeded
@@ -436,8 +431,8 @@ def weighted_sample_exact_k(
     saturating: the direct power form rounds to exactly 1.000000000
     for weights above ~2e2 at 9-decimal rounding, collapsing all
     high-weight rows into an id-ascending tie, whereas ln(u)/w keeps
-    distinct negative keys at every weight. The key still ROUNDS to
-    ``round_to`` before ranking with the id as tiebreak — ``ln`` may
+    distinct negative keys at every weight. The key still ROUNDS to 9
+    decimals before ranking with the id as tiebreak — ``ln`` may
     differ by an ulp between libm implementations, and the rounding
     absorbs it (the cosine round-6 convention).
 
@@ -459,7 +454,7 @@ def weighted_sample_exact_k(
     ).cast("long")
     u = (bucket.cast("double") + 0.5) / 4294967296.0
     w = F.col(weight_col).cast("double")
-    key = F.when(w > 0, F.round(F.log(u) / w, round_to)).otherwise(
+    key = F.when(w > 0, F.round(F.log(u) / w, 9)).otherwise(
         F.lit(float("-inf"))
     )
     staged = df.withColumn("aes_key", key)
@@ -482,7 +477,6 @@ def quantile_normalize(
     score_col: str,
     group_col: str,
     bins: int = 32,
-    round_to: int = 6,
 ) -> DataFrame:
     """Cross-group score CALIBRATION by quantile normalization: each
     row's score is replaced by the GLOBAL distribution's value at the
@@ -599,7 +593,7 @@ def quantile_normalize(
             "norm_score",
             F.round(
                 F.col("__glo") + (F.col("__tgt") + 1) * F.col("__gwidth"),
-                round_to,
+                6,
             ),
         )
         .drop(
@@ -609,29 +603,24 @@ def quantile_normalize(
     )
 
 
-def auto_shard_width(
-    approx_docs: int,
-    target_docs_per_shard: int = 10_000,
-    lo: int = 1,
-    hi: int = 8,
-) -> int:
+def auto_shard_width(approx_docs: int) -> int:
     """The r9 FFD probe's docs-per-shard guidance as code (BENCH_NOTES
     r9: the per-shard O(docs x bins) Python loop stays seconds-per-
     shard while docs-per-shard <= ~10k; tail 0.83 measured at 2.5k
     with shard count HELD): the smallest hex ``shard_width`` whose
     ``16**width`` shards keep expected shard occupancy at or under
-    ``target_docs_per_shard``. ``approx_docs`` is a caller hint
+    10,000 docs. ``approx_docs`` is a caller hint
     (catalog stats / ``io.table_row_hint`` — never a driver count job,
     the auto_num_planes contract); a non-positive hint returns the
-    pre-r10 default width 2 (256 shards). Clamped to [lo, hi]: width 8
+    pre-r10 default width 2 (256 shards). Clamped to [1, 8]: width 8
     is 4.3e9 shards — beyond any corpus this loop should see."""
     import math
 
     if approx_docs <= 0:
         return 2
-    shards_needed = max(1, -(-approx_docs // max(target_docs_per_shard, 1)))
+    shards_needed = max(1, -(-approx_docs // 10_000))
     width = max(1, math.ceil(math.log(shards_needed, 16)))
-    return max(lo, min(hi, width))
+    return min(8, width)
 
 
 def bin_pack_documents(

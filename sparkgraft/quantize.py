@@ -122,7 +122,6 @@ def cosine_topk_quantized(
     vec_col: str = "embedding",
     k: int = 10,
     rerank_factor: int = 4,
-    round_to: int = 6,
 ) -> DataFrame:
     """Two-tier exact-ish top-k: the int8 tier pre-scores the full
     corpus scan (4x fewer scan/shuffle bytes than float32) and keeps
@@ -176,7 +175,7 @@ def cosine_topk_quantized(
         .select(
             "query_id",
             id_col,
-            F.round(cosine(F.col("__cvec"), F.col("__qvec")), round_to).alias(
+            F.round(cosine(F.col("__cvec"), F.col("__qvec")), 6).alias(
                 "cos_sim"
             ),
         )

@@ -1481,9 +1481,9 @@ def bm25_doc_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bm25_pruned_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``bm25_doc_retrieval`` with the r8 term-skew guard engaged
     (``max_df_ratio=0.79``, splitting this tiny synthetic vocabulary's
-    0.776-0.804 df band — see text.bm25_topk and
-    tools/bm25_skew_probe.py): hot terms are excluded from candidate
-    generation only, survivors score exactly. On this stopword-heavy
+    0.776-0.804 df band — see text.bm25_topk and the BM25 term-skew
+    probe in BENCH_NOTES.md round 8): hot terms are excluded from
+    candidate generation only, survivors score exactly. On this stopword-heavy
     corpus the prune genuinely drops terms and (for some queries)
     candidates, so the DuckDB hash match verifies the pruned plan's
     candidate semantics AND its exact scoring, at sf0.01 and sf0.1."""

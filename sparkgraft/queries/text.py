@@ -326,8 +326,8 @@ def winnowing_shared_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame
     fp_all = winnowed.select("doc_id", F.explode("__fps").alias("fp"))
     # df-cap pruning: ubiquitous fingerprints (this corpus's tiny vocab
     # makes many 8-grams near-universal) generate quadratic join output
-    # for zero signal — drop them BEFORE the self-join, like jaccard's
-    # max_df. Mirrored exactly in the oracle SQL.
+    # for zero signal — drop them BEFORE the self-join. Mirrored exactly
+    # in the oracle SQL.
     rare = (
         fp_all.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("__df"))

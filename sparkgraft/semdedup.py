@@ -49,23 +49,22 @@ __all__ = ["assign_with_sim_udf", "semantic_dedup", "auto_n_clusters"]
 def auto_n_clusters(
     approx_rows: int,
     target_cluster: int = 2000,
-    lo: int = 4,
-    hi: int = 1_000_000,
 ) -> int:
     """The module docstring's K rule as code: ``n_clusters ≈
     corpus_size / target_cluster`` so each cluster's pairwise matmul
     stays a few-ms BLAS call and total work stays ~linear (the paper's
     own regime — K≈100k on LAION). ``approx_rows`` is a caller hint
     (catalog stats, manifest), never a driver count, mirroring
-    similarity.auto_num_planes. Floor ``lo`` keeps tiny corpora from
-    degenerating into one all-pairs cluster; ``hi`` caps the broadcast
-    centroid table (hi * dim floats must still broadcast — beyond that,
-    shard the corpus and dedup per shard)."""
+    similarity.auto_num_planes. The floor of 4 keeps tiny corpora from
+    degenerating into one all-pairs cluster; the cap of 1e6 bounds the
+    broadcast centroid table (1e6 * dim floats must still broadcast —
+    beyond that, shard the corpus and dedup per shard)."""
     import math
 
     if approx_rows <= 0:
-        return lo
-    return max(lo, min(hi, math.ceil(approx_rows / max(target_cluster, 1))))
+        return 4
+    k = math.ceil(approx_rows / max(target_cluster, 1))
+    return max(4, min(1_000_000, k))
 
 
 def assign_with_sim_udf(

@@ -51,7 +51,6 @@ __all__ = [
     "standardize_embeddings",
     "cosine_pairs",
     "cosine_pairs_blocked",
-    "rp_lsh_bucket",
     "rp_bucket_udf",
     "auto_num_planes",
     "rp_lsh_topk",
@@ -108,12 +107,12 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
 
 
-def np_cosine(round_to: int = 6):
+def np_cosine():
     """Arrow-batched cosine (vectorized Pandas UDF) for the approximate
     indexes' scoring stages: one numpy pass per batch vs ``dim``
     interpreted HOF-lambda closure calls per row (HOFs never enter
     whole-stage codegen — measured seconds per 2k rows at dim=64).
-    Rounded to ``round_to`` so rankings tie-break identically to the
+    Rounded to 6 places so rankings tie-break identically to the
     HOF form; not for the oracled exact queries, which need the HOF
     operation order for bit-exact cross-engine parity."""
     from pyspark.sql.functions import pandas_udf
@@ -129,7 +128,7 @@ def np_cosine(round_to: int = 6):
         # zero-norm guard: an unguarded 0/0 yields NaN, and Spark sorts
         # NaN above every real double, so zero vectors would rank FIRST
         # in top-k results; cos=0.0 ranks them below any positive match.
-        return pd.Series(np.round(num / np.where(den == 0.0, 1.0, den), round_to))
+        return pd.Series(np.round(num / np.where(den == 0.0, 1.0, den), 6))
 
     return cos
 
@@ -140,7 +139,6 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    round_to: int = 6,
 ) -> DataFrame:
     """Exact top-k nearest corpus vectors per query vector by cosine.
 
@@ -166,7 +164,7 @@ def cosine_topk(
         .select(
             "query_id",
             id_col,
-            F.round(cosine(F.col(vec_col), F.col("__qvec")), round_to).alias(
+            F.round(cosine(F.col(vec_col), F.col("__qvec")), 6).alias(
                 "cos_sim"
             ),
         )
@@ -188,7 +186,6 @@ def hard_negatives(
     vec_col: str = "embedding",
     label_col: str = "label",
     k: int = 5,
-    round_to: int = 6,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: per query, the
     top-``k`` most-similar corpus vectors with a DIFFERENT label — the
@@ -228,7 +225,7 @@ def hard_negatives(
             "query_label",
             id_col,
             F.col(label_col).alias("neg_label"),
-            F.round(cosine(F.col(vec_col), F.col("__qvec")), round_to).alias(
+            F.round(cosine(F.col(vec_col), F.col("__qvec")), 6).alias(
                 "cos_sim"
             ),
         )
@@ -252,7 +249,6 @@ def knn_label_vote(
     vec_col: str = "embedding",
     label_col: str = "label",
     k: int = 10,
-    round_to: int = 6,
 ) -> DataFrame:
     """k-nearest-neighbor CLASSIFICATION over the embedding corpus:
     each query vector takes the majority label of its exact top-k
@@ -274,7 +270,7 @@ def knn_label_vote(
     """
     from pyspark.sql import Window
 
-    topk = cosine_topk(corpus, queries, id_col, vec_col, k, round_to)
+    topk = cosine_topk(corpus, queries, id_col, vec_col, k)
     nbr_labels = corpus.select(
         F.col(id_col), F.col(label_col).alias("__nbr_label")
     )
@@ -309,7 +305,6 @@ def label_noise_candidates(
     label_col: str = "label",
     k: int = 10,
     min_votes: int = 7,
-    round_to: int = 6,
 ) -> DataFrame:
     """Label-noise audit (Confident-Learning-style neighborhood
     disagreement): a row is a mislabel CANDIDATE when a strong
@@ -324,9 +319,7 @@ def label_noise_candidates(
     votes, top_cos, is_suspect)`` — the full audit report, not just
     the flagged subset, so reviewers see the margin everywhere.
     """
-    votes = knn_label_vote(
-        corpus, queries, id_col, vec_col, label_col, k, round_to
-    )
+    votes = knn_label_vote(corpus, queries, id_col, vec_col, label_col, k)
     assigned = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(label_col).alias("assigned_label"),
@@ -473,13 +466,12 @@ def cosine_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.99,
-    round_to: int = 6,
 ) -> DataFrame:
     """All pairs with cosine >= threshold (embedding near-dup).
 
     Exact and O(n^2) — correct at dimension-table scale and as the
-    verification stage behind ``rp_lsh_bucket`` candidates at corpus
-    scale (same pattern as dedup.minhash_near_dups: LSH proposes,
+    verification stage behind ``cosine_pairs_lsh`` candidates at
+    corpus scale (same pattern as dedup.minhash_near_dups: LSH proposes,
     exact math disposes)."""
     # norms AND double-cast arrays staged per vector (not per pair): the
     # pair expression is one zip+fold and a multiply — no per-pair array
@@ -512,7 +504,7 @@ def cosine_pairs(
                     dot_predoubled(F.col("__va"), F.col("__vb")),
                     F.col("__na") * F.col("__nb"),
                 ),
-                round_to,
+                6,
             ).alias("cos_sim"),
         )
         .where(F.col("cos_sim") >= threshold)
@@ -524,9 +516,7 @@ def cosine_pairs_blocked(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.99,
-    round_to: int = 6,
     block_rows: int = 1024,
-    margin: float = 1e-6,
     approx_rows: int | None = None,
     num_blocks: int | None = None,
 ) -> DataFrame:
@@ -559,11 +549,11 @@ def cosine_pairs_blocked(
 
     Completeness is guaranteed, not probabilistic (unlike an LSH
     proposer): the matmul stage keeps every pair with numpy-cosine >=
-    ``threshold - margin`` — numpy and the HOF fold agree on the true
-    cosine to ~1e-12, so ``margin=1e-6`` strictly over-generates. The
+    ``threshold - 1e-6`` — numpy and the HOF fold agree on the true
+    cosine to ~1e-12, so the 1e-6 margin strictly over-generates. The
     survivors (a near-dup set, tiny by definition) are then re-scored
     with the identical staged HOF arithmetic as ``cosine_pairs`` /
-    the SQL oracle (left-to-right double fold, round(round_to)), so the
+    the SQL oracle (left-to-right double fold, round(6)), so the
     emitted ``cos_sim`` values are bit-exact cross-engine and the final
     ``>= threshold`` filter applies to the rounded value.
     """
@@ -613,7 +603,7 @@ def cosine_pairs_blocked(
         F.broadcast(pairs).join(a, "__ba").join(b, "__bb"),
         min(n_pairs, spark.sparkContext.defaultParallelism),
     )
-    lo = threshold - margin
+    lo = threshold - 1e-6
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -677,7 +667,7 @@ def cosine_pairs_blocked(
                     dot_predoubled(F.col("__va"), F.col("__vb")),
                     F.col("__na") * F.col("__nb"),
                 ),
-                round_to,
+                6,
             ).alias("cos_sim"),
         )
         .where(F.col("cos_sim") >= threshold)
@@ -699,8 +689,6 @@ def _hyperplane(plane: int, dim: int) -> list[float]:
 def auto_num_planes(
     approx_rows: int,
     target_bucket: int = 64,
-    lo: int = 4,
-    hi: int = 24,
 ) -> int:
     """The SIZE-num_planes-TO-THE-CORPUS rule as code (see
     cosine_pairs_lsh: per-table candidate volume is ~n^2 / 2^planes,
@@ -710,37 +698,16 @@ def auto_num_planes(
     ~n * target_bucket, linear in the corpus. ``approx_rows`` is a
     caller hint (catalog stats, a prior count, the manifest), never a
     driver job, matching cosine_pairs_blocked's approx_rows contract.
-    Clamped to [lo, hi]: below 2^lo buckets banding stops
-    discriminating; above ``hi`` planes per-plane collision p^planes
+    Clamped to [4, 24]: below 2^4 buckets banding stops
+    discriminating; above 24 planes per-plane collision p^planes
     underflows for anything but near-identical vectors (raise
     num_tables instead at that point)."""
     import math
 
     if approx_rows <= 0:
-        return lo
+        return 4
     need = math.ceil(math.log2(max(approx_rows / max(target_bucket, 1), 1.0)))
-    return max(lo, min(hi, need))
-
-
-def rp_lsh_bucket(
-    vec: Column, dim: int, num_planes: int = 8
-) -> Column:
-    """Sign-random-projection bucket id: bit p = sign(vec . plane_p).
-    Vectors in the same bucket are ANN candidates. Hyperplanes are
-    md5-derived constants folded into the plan (broadcast literals)."""
-    bucket = F.lit(0).cast("bigint")
-    dv = _d(vec)
-    for p in range(num_planes):
-        plane = F.array(*[F.lit(v) for v in _hyperplane(p, dim)])
-        proj = F.aggregate(
-            F.zip_with(dv, plane, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(proj > 0, F.lit(2**p).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-    return bucket
+    return max(4, min(24, need))
 
 
 def rp_bucket_udf(dim: int, num_planes: int, num_tables: int):
@@ -783,12 +750,9 @@ def cosine_pairs_lsh(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9,
-    num_planes: int | None = None,
+    num_planes: int = 8,
     num_tables: int = 8,
     max_bucket: int = 4096,
-    round_to: int = 6,
-    persist_intermediates: bool = True,
-    approx_rows: int | None = None,
 ) -> DataFrame:
     """Approximate near-dup PAIRS via banded RP-LSH: candidates = pairs
     sharing a bucket in ANY table; exact cosine (identical staged
@@ -802,13 +766,11 @@ def cosine_pairs_lsh(
     shuffled into buckets) self-joins on ``(table, bucket)``. Vectors
     re-attach only for surviving candidate pairs.
 
-    ``persist_intermediates`` caches the capped id->bucket table (3
-    longs per row): it feeds both self-join sides, and Spark does NOT
-    plan a ReusedExchange across them here (the window filter sits
-    between the exchange and the join), so uncached the scan + Arrow
-    matmul + window run twice (measured ~2x on the proposer stage).
-    Disable if ~num_tables * |corpus| id rows exceed cluster
-    memory+disk cache — the same discipline as jaccard_pairs.
+    The capped id->bucket table (3 longs per row) is cached: it feeds
+    both self-join sides, and Spark does NOT plan a ReusedExchange
+    across them here (the window filter sits between the exchange and
+    the join), so uncached the scan + Arrow matmul + window run twice
+    (measured ~2x on the proposer stage).
 
     ``max_bucket`` drops degenerate hub buckets (near-parallel vector
     masses land in one bucket; a B-row bucket emits B^2/2 candidate
@@ -837,20 +799,13 @@ def cosine_pairs_lsh(
     SUBSET of the exact result at the same threshold. NULL embeddings
     are dropped up front (a NULL side can never reach the threshold).
 
-    ``num_planes=None`` (the r10 default, closing the library-default
-    gap the registered queries already closed in r5): sized via
-    :func:`auto_num_planes` from the ``approx_rows`` hint; without a
-    hint the pre-r10 8 applies. Explicit ints stay the escape hatch.
+    Size ``num_planes`` for a large corpus with :func:`auto_num_planes`
+    from a row-count hint; the default is 8.
     """
     from pyspark.sql import Window
 
     from .relational import spread
 
-    if num_planes is None:
-        num_planes = (
-            auto_num_planes(approx_rows) if approx_rows and approx_rows > 0
-            else 8
-        )
     vecs = df.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col), F.col(vec_col)
     )
@@ -865,14 +820,13 @@ def cosine_pairs_lsh(
         .where(F.col("__bsz") <= max_bucket)
         .drop("__bsz")
     )
-    if persist_intermediates:
-        # eager + lineage-truncating (r13): the two self-join sides are
-        # planned as concurrent AQE stages and raced the cold cache,
-        # running the Arrow bucket matmul + window twice — see
-        # relational.materialize_intermediate
-        from .relational import materialize_intermediate
+    # eager + lineage-truncating (r13): the two self-join sides are
+    # planned as concurrent AQE stages and raced the cold cache, running
+    # the Arrow bucket matmul + window twice — see
+    # relational.materialize_intermediate
+    from .relational import materialize_intermediate
 
-        ids = materialize_intermediate(ids)
+    ids = materialize_intermediate(ids)
     cand = (
         ids.select("table", "bucket", F.col("__id").alias("id_a"))
         .join(
@@ -914,7 +868,7 @@ def cosine_pairs_lsh(
                     dot_predoubled(F.col("__va"), F.col("__vb")),
                     F.col("__na") * F.col("__nb"),
                 ),
-                round_to,
+                6,
             ).alias("cos_sim"),
         )
         .where(F.col("cos_sim") >= threshold)
@@ -930,7 +884,6 @@ def rp_lsh_topk(
     k: int = 10,
     num_planes: int | None = None,
     num_tables: int = 4,
-    round_to: int = 6,
     approx_rows: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: candidates = corpus vectors sharing an LSH
@@ -995,7 +948,7 @@ def rp_lsh_topk(
         .select(
             "query_id",
             F.col("cand_id").alias(id_col),
-            np_cosine(round_to)(F.col("__cvec"), F.col("__qvec")).alias(
+            np_cosine()(F.col("__cvec"), F.col("__qvec")).alias(
                 "cos_sim"
             ),
         )
@@ -1146,11 +1099,7 @@ def ivf_probe_udf(
     return probe
 
 
-def auto_n_centroids(
-    approx_rows: int,
-    lo: int = 16,
-    hi: int = 65536,
-) -> int:
+def auto_n_centroids(approx_rows: int) -> int:
     """The SIZE-the-coarse-quantizer-TO-THE-CORPUS rule as code (the
     :func:`auto_num_planes` convention applied to IVF/IVF-PQ): with
     ``n_probe`` fixed, each query scans ~``n_probe * N / n_centroids``
@@ -1162,8 +1111,8 @@ def auto_n_centroids(
     the sqrt rule used by that probe, ``sqrt(approx_rows / 8)``
     (the classic Jegou/FAISS n_list ~ sqrt(N) family; the constant
     balances this implementation's cheap vectorized assignment against
-    its gather-dominated scan), clamped to [lo, hi] — below ``lo``
-    lists pruning stops paying, above ``hi`` the per-query probe
+    its gather-dominated scan), clamped to [16, 65536] — below 16
+    lists pruning stops paying, above 65536 the per-query probe
     bookkeeping dominates (raise n_probe instead at that point).
     ``approx_rows`` is a caller hint (catalog stats, a prior count,
     the manifest), never a driver job — the auto_num_planes
@@ -1171,8 +1120,8 @@ def auto_n_centroids(
     import math
 
     if approx_rows <= 0:
-        return lo
-    return max(lo, min(hi, int(round(math.sqrt(approx_rows / 8.0)))))
+        return 16
+    return max(16, min(65536, int(round(math.sqrt(approx_rows / 8.0)))))
 
 
 def _resolve_n_centroids(n_centroids: int | None, approx_rows: int | None) -> int:
@@ -1194,8 +1143,8 @@ def _train_sample_size(sample_size: int | None, n_centroids: int) -> int:
     """Default training-sample sizing (VERDICT r9 #2): k-means needs
     ~64-100 points per centroid (the Jegou/FAISS rule ivf_train's own
     docstring cites), so a FIXED 65536-row sample starves sqrt(N)-sized
-    quantizers (1-3 points/centroid at the hi clamp). ``None`` scales
-    the sample with the codebook: ``max(65536, 64 * n_centroids)``,
+    quantizers (1-3 points/centroid at the 65536-list clamp). ``None``
+    scales the sample with the codebook: ``max(65536, 64 * n_centroids)``,
     HARD-CAPPED at ``_TRAIN_SAMPLE_CAP`` = 4,194,304 rows — the ~2 GB
     (dim 64 float64) bound the bounded-driver-collect contract
     documents. The cap exists because callers above the IVF clamp
@@ -1307,7 +1256,6 @@ def ivf_topk(
     n_centroids: int | None = None,
     n_probe: int = 4,
     iters: int = 3,
-    round_to: int = 6,
     approx_rows: int | None = None,
 ) -> DataFrame:
     """Approximate top-k via an IVF index: assign every corpus vector to
@@ -1356,7 +1304,7 @@ def ivf_topk(
         .select(
             "query_id",
             F.col("cand_id").alias(id_col),
-            np_cosine(round_to)(F.col("__cvec"), F.col("__qvec")).alias(
+            np_cosine()(F.col("__cvec"), F.col("__qvec")).alias(
                 "cos_sim"
             ),
         )
@@ -1374,7 +1322,6 @@ def standardize_embeddings(
     dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-DIMENSION standardization of an embedding column:
     ``z_i = (x_i - mean_i) / std_i`` with corpus-wide mean/std per
@@ -1386,8 +1333,8 @@ def standardize_embeddings(
     Determinism: mean and E[x^2] accumulate in exact DECIMAL (the
     label_centroid_similarity discipline — a raw double sum depends on
     partition completion order), std = sqrt(E[x^2] - mean^2)
-    (population form), and each output coordinate rounds to
-    ``round_to``; the DuckDB oracle reproduces the identical math.
+    (population form), and each output coordinate rounds to 6
+    places; the DuckDB oracle reproduces the identical math.
 
     Scale shape: one posexplode pass into a (pos, value) aggregation —
     map-side combinable, 'dim' output rows — broadcast back as an
@@ -1431,7 +1378,7 @@ def standardize_embeddings(
         ),
         F.col("__sds"),
         lambda c, s: F.round(
-            F.when(s > 0.0, c / s).otherwise(F.lit(0.0)), round_to
+            F.when(s > 0.0, c / s).otherwise(F.lit(0.0)), 6
         ),
     )
     return withstats.select(
@@ -1445,7 +1392,6 @@ def semantic_decontaminate(
     threshold: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_to: int = 6,
 ) -> DataFrame:
     """SEMANTIC benchmark decontamination: flag corpus items whose
     embedding is too close to ANY eval-set embedding — the
@@ -1480,7 +1426,7 @@ def semantic_decontaminate(
         .select(
             id_col,
             "__eval_id",
-            F.round(cosine(F.col(vec_col), F.col("__evec")), round_to).alias(
+            F.round(cosine(F.col(vec_col), F.col("__evec")), 6).alias(
                 "__sim"
             ),
         )
@@ -1580,8 +1526,6 @@ def pca_whiten(
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    eps: float = 1e-9,
-    round_to: int = 6,
 ) -> DataFrame:
     """PCA whitening: project embeddings onto the top-``k`` principal
     components scaled to unit variance — the decorrelation transform
@@ -1599,7 +1543,7 @@ def pca_whiten(
     mirrored projections).
 
     Returns (id_col, z) with ``z`` the k-dim whitened array, each
-    coordinate rounded to ``round_to``.
+    coordinate rounded to 6 places.
     """
     import numpy as np
 
@@ -1614,7 +1558,7 @@ def pca_whiten(
     order = np.argsort(vals)[::-1][:k]
     # rank guard: a component whose eigenvalue sits below a RELATIVE
     # tolerance of the spectrum is numerical noise (rounded-covariance
-    # residue), and 1/(sqrt(eps)+eps) would amplify it ~1e9x into the
+    # residue), and 1/(sqrt(v)+1e-9) would amplify it ~1e9x into the
     # output — emit exact 0.0 for that coordinate instead, keeping the
     # k-dim output shape stable while confining whitening to the
     # effective rank
@@ -1627,7 +1571,7 @@ def pca_whiten(
             continue
         if abs(vec.min()) > abs(vec.max()):
             vec = -vec
-        scale = 1.0 / float(np.sqrt(max(vals[idx], 0.0)) + eps)
+        scale = 1.0 / float(np.sqrt(max(vals[idx], 0.0)) + 1e-9)
         comps.append((vec * scale).tolist())
 
     means_row = (
@@ -1661,7 +1605,7 @@ def pca_whiten(
                     F.lit(0.0),
                     lambda acc, t: acc + t,
                 ),
-                round_to,
+                6,
             )
             for comp in comps
         ]
@@ -1677,7 +1621,6 @@ def rrf_fuse(
     query_col: str = "query_id",
     rank_col: str = "rank",
     k: int = 60,
-    round_to: int = 8,
 ) -> DataFrame:
     """Reciprocal-rank fusion of per-query candidate rankings:
     ``score(d) = sum over signals of 1 / (k + rank_signal(d))``
@@ -1708,7 +1651,7 @@ def rrf_fuse(
         F.lit(1.0) / (F.lit(float(k)) + F.col(rank_col)), 12
     ).cast("decimal(18,12)")
     return tagged.groupBy(query_col, id_col).agg(
-        F.round(F.sum(term).cast("double"), round_to).alias("rrf_score"),
+        F.round(F.sum(term).cast("double"), 8).alias("rrf_score"),
         F.count(F.lit(1)).cast("bigint").alias("n_signals"),
     )
 
@@ -1718,7 +1661,6 @@ def covariance_cells_arrow(
     dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_to: int = 8,
 ) -> DataFrame:
     """Arrow partial-Gram covariance — the HIGH-DIMENSION scale tier of
     :func:`covariance_cells`. The exact tier explodes d(d+1)/2 product
@@ -1793,7 +1735,7 @@ def covariance_cells_arrow(
             F.col("s") / F.col("__n")
             - (F.element_at("__sums", (F.col("i") + 1).cast("int")) / F.col("__n"))
             * (F.element_at("__sums", (F.col("j") + 1).cast("int")) / F.col("__n")),
-            round_to,
+            8,
         ).alias("cov"),
     )
 
@@ -1817,23 +1759,21 @@ def pq_train(
     n_codes: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    iters: int = 3,
-    sample_size: int = 65536,
 ) -> list[list[list[float]]]:
     """Train the PQ codebooks: the vector splits into ``m`` equal
     subspaces (``dim % m == 0``), each with its own ``n_codes``-entry
     Euclidean k-means codebook trained on a bounded, deterministic
     sample — the same bounded-driver-loop design as :func:`ivf_train`
     (one TakeOrdered seeded-md5-uniform sample job, never an id prefix
-    — :func:`_train_sample`; local numpy Lloyd, first-rows init, empty
-    clusters keep their previous centroid, no RNG). The fixed 65536
-    default sample already covers the uint8-capped ``n_codes <= 256``
-    codebooks at >250 points/code. Returns
+    — :func:`_train_sample`; 3 local numpy Lloyd passes, first-rows
+    init, empty clusters keep their previous centroid, no RNG). The
+    fixed 65536-row sample already covers the uint8-capped
+    ``n_codes <= 256`` codebooks at >250 points/code. Returns
     ``codebooks[sub][code] -> list[dsub floats]``."""
     if dim % m != 0:
         raise ValueError(f"pq_train: dim {dim} not divisible by m {m}")
-    x = _train_sample(corpus, id_col, vec_col, sample_size, op="pq_train")
-    return _pq_lloyd(x, m, n_codes, iters)
+    x = _train_sample(corpus, id_col, vec_col, 65536, op="pq_train")
+    return _pq_lloyd(x, m, n_codes, 3)
 
 
 def _pq_lloyd(
@@ -1962,7 +1902,6 @@ def pq_adc_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    round_to: int = 6,
 ) -> DataFrame:
     """Approximate top-k by asymmetric distance (ADC): each query
     precomputes a (m, n_codes) table of squared L2 distances from its
@@ -2021,7 +1960,7 @@ def pq_adc_topk(
             d = np.zeros((len(qids), len(ids)), dtype=np.float64)
             for s in range(m):
                 d += luts[:, s, :][:, codes[:, s]]
-            d = np.round(d, round_to)
+            d = np.round(d, 6)
             # per-batch partial top-k per query under the global
             # (adist, cand_id) total order: argpartition narrows to a
             # k-sized pool, lexsort breaks adist ties exactly as the
@@ -2077,7 +2016,6 @@ def _exact_rerank_shortlist(
     id_col: str,
     vec_col: str,
     k: int,
-    round_to: int,
 ) -> DataFrame:
     """Shared rerank tail of the PQ / IVF-PQ production compositions:
     the (query_id, id_col) shortlist joins back to the raw corpus
@@ -2093,7 +2031,7 @@ def _exact_rerank_shortlist(
         F.col("__cv"), F.col("__qv"), lambda a, b: (a - b) * (a - b)
     )
     d2 = F.round(
-        F.aggregate(diff2, F.lit(0.0), lambda acc, v: acc + v), round_to
+        F.aggregate(diff2, F.lit(0.0), lambda acc, v: acc + v), 6
     )
     w = Window.partitionBy("query_id").orderBy(F.asc("dist2"), F.asc(id_col))
     return (
@@ -2115,7 +2053,6 @@ def pq_rerank_topk(
     vec_col: str = "embedding",
     k: int = 10,
     shortlist: int = 50,
-    round_to: int = 6,
 ) -> DataFrame:
     """The production PQ composition: ADC proposes a ``shortlist`` per
     query from the codes index, raw vectors dispose — the shortlist
@@ -2129,11 +2066,9 @@ def pq_rerank_topk(
     codes = pq_encode(corpus, codebooks, id_col=id_col, vec_col=vec_col)
     sl = pq_adc_topk(
         codes, queries, codebooks, id_col=id_col, vec_col=vec_col,
-        k=shortlist, round_to=round_to,
+        k=shortlist,
     )
-    return _exact_rerank_shortlist(
-        corpus, queries, sl, id_col, vec_col, k, round_to
-    )
+    return _exact_rerank_shortlist(corpus, queries, sl, id_col, vec_col, k)
 
 
 def ivfpq_rerank_topk(
@@ -2148,8 +2083,6 @@ def ivfpq_rerank_topk(
     n_probe: int = 4,
     m: int = 16,
     n_codes: int = 64,
-    iters: int = 3,
-    round_to: int = 6,
     approx_rows: int | None = None,
 ) -> DataFrame:
     """The COMPLETE production ANN serving path (the composition a
@@ -2166,12 +2099,9 @@ def ivfpq_rerank_topk(
     sl = ivfpq_topk(
         corpus, queries, dim, id_col=id_col, vec_col=vec_col,
         k=shortlist, n_centroids=n_centroids, n_probe=n_probe,
-        m=m, n_codes=n_codes, iters=iters, round_to=round_to,
-        approx_rows=approx_rows,
+        m=m, n_codes=n_codes, approx_rows=approx_rows,
     )
-    return _exact_rerank_shortlist(
-        corpus, queries, sl, id_col, vec_col, k, round_to
-    )
+    return _exact_rerank_shortlist(corpus, queries, sl, id_col, vec_col, k)
 
 
 def ivfpq_train(
@@ -2182,8 +2112,6 @@ def ivfpq_train(
     n_centroids: int | None = None,
     m: int = 16,
     n_codes: int = 64,
-    iters: int = 3,
-    sample_size: int | None = None,
     approx_rows: int | None = None,
 ) -> tuple[list[tuple[int, list[float]]], list[list[list[float]]]]:
     """Train the composed IVF-PQ index (the production ANN layout:
@@ -2196,23 +2124,23 @@ def ivfpq_train(
     construction). One bounded seeded-md5-uniform sample (the
     :func:`_train_sample` draw — never an id prefix) feeds both
     trainers; ``n_centroids=None`` auto-sizes from ``approx_rows`` and
-    ``sample_size=None`` scales with the quantizer, both per
-    :func:`ivf_train`'s contract; everything is deterministic (no
+    the sample scales with the quantizer, both per :func:`ivf_train`'s
+    contract; everything is deterministic (no
     RNG)."""
     if dim % m != 0:
         raise ValueError(f"ivfpq_train: dim {dim} not divisible by m {m}")
     n_centroids = _resolve_n_centroids(n_centroids, approx_rows)
-    sample_size = _train_sample_size(sample_size, n_centroids)
+    sample_size = _train_sample_size(None, n_centroids)
     centroids = ivf_train(
         corpus, dim, id_col=id_col, vec_col=vec_col,
-        n_centroids=n_centroids, iters=iters, sample_size=sample_size,
+        n_centroids=n_centroids, sample_size=sample_size,
     )
     x = _train_sample(corpus, id_col, vec_col, sample_size, op="ivfpq_train")
     cmat = _centroid_matrix(centroids)
     cnorm = np.linalg.norm(cmat, axis=1)
     cn = (cmat / np.where(cnorm == 0.0, 1.0, cnorm)[:, None]).T
     assign = _cosine_argmax_chunked(x, cn)
-    books = _pq_lloyd(x - cmat[assign], m, n_codes, iters)
+    books = _pq_lloyd(x - cmat[assign], m, n_codes, 3)
     return centroids, books
 
 
@@ -2265,8 +2193,6 @@ def ivfpq_topk(
     n_probe: int = 4,
     m: int = 16,
     n_codes: int = 64,
-    iters: int = 3,
-    round_to: int = 6,
     approx_rows: int | None = None,
 ) -> DataFrame:
     """Approximate top-k over the composed IVF-PQ index: corpus
@@ -2314,7 +2240,7 @@ def ivfpq_topk(
     encode/serve split as the PQ tier's pq_encode / pq_adc_topk."""
     centroids, books = ivfpq_train(
         corpus, dim, id_col=id_col, vec_col=vec_col,
-        n_centroids=n_centroids, m=m, n_codes=n_codes, iters=iters,
+        n_centroids=n_centroids, m=m, n_codes=n_codes,
         approx_rows=approx_rows,
     )
     codes = ivfpq_encode(
@@ -2322,7 +2248,7 @@ def ivfpq_topk(
     )
     return ivfpq_topk_from_codes(
         codes, queries, centroids, books, id_col=id_col, vec_col=vec_col,
-        k=k, n_probe=n_probe, round_to=round_to,
+        k=k, n_probe=n_probe,
     )
 
 
@@ -2365,7 +2291,6 @@ def ivfpq_topk_from_codes(
     vec_col: str = "embedding",
     k: int = 10,
     n_probe: int = 4,
-    round_to: int = 6,
     codes_fingerprint: str | None = None,
 ) -> DataFrame:
     """Serve IVF-PQ top-k from a persisted/accumulated codes store
@@ -2479,7 +2404,7 @@ def ivfpq_topk_from_codes(
                 lut = lut_for(int(q), int(c))
                 gathered[idx] = lut[sub_idx, codes[idx].T].sum(axis=0)
                 per_query.setdefault(int(q), []).append(idx)
-            gathered = np.round(gathered, round_to)
+            gathered = np.round(gathered, 6)
             # per-batch partial top-k per query (exact under boundary
             # ties — the pq_adc_topk threshold-cut argument); self-rows
             # were already excluded by the upstream filter
@@ -2553,8 +2478,6 @@ def quantizer_stale(
     manifest: dict,
     current_rows: int | None = None,
     drift_df: "DataFrame | None" = None,
-    growth_factor: float = 4.0,
-    min_cos: float = 0.8,
 ) -> dict:
     """The train-once-index-forever REFRESH RULE (VERDICT r9 'What's
     missing' #2: persistence without an expiry policy): given a saved
@@ -2564,14 +2487,14 @@ def quantizer_stale(
     - **corpus growth**: the manifest's ``training_rows`` (the corpus
       row hint recorded at :func:`save_quantizer` time) vs
       ``current_rows`` (the same hint today — catalog stats /
-      ``io.table_row_hint``, never a count job). A corpus past
-      ``growth_factor`` x its training-time size has sqrt(N)-rule
-      centroids sized for a smaller world (auto_n_centroids doubles
-      every 4x), so 4.0 is the default trip point.
+      ``io.table_row_hint``, never a count job). A corpus past 4x its
+      training-time size has sqrt(N)-rule centroids sized for a
+      smaller world (auto_n_centroids doubles every 4x), so 4x is the
+      trip point.
     - **distribution drift**: ``drift_df`` is the output of
       :func:`centroid_drift` (the ``embedding_centroid_drift``
       operator) over the corpus — any label whose snapshot-halves
-      centroid cosine falls below ``min_cos`` (its ``drifted`` verdict)
+      centroid cosine falls below 0.8 (its ``drifted`` verdict)
       means the quantizer was trained on vectors that no longer look
       like the corpus. The collect is |labels| rows — bounded.
 
@@ -2586,11 +2509,11 @@ def quantizer_stale(
     recall."""
     reasons: list[str] = []
     trained = int(manifest.get("training_rows", 0) or 0)
-    if trained > 0 and current_rows is not None and current_rows > (
-        growth_factor * trained
+    if trained > 0 and current_rows is not None and (
+        current_rows > 4.0 * trained
     ):
         reasons.append(
-            f"corpus_grew: {current_rows} rows > {growth_factor}x the "
+            f"corpus_grew: {current_rows} rows > 4.0x the "
             f"{trained} recorded at training"
         )
     if drift_df is not None:
@@ -2616,12 +2539,11 @@ def quantizer_stale(
         drifted = [
             (r["label"], float(r["centroid_cos"]))
             for r in rows
-            if r["centroid_cos"] < min_cos
+            if r["centroid_cos"] < 0.8
         ]
         for label, cos in sorted(drifted):
             reasons.append(
-                f"centroid_drift: label {label!r} halves-cosine {cos} "
-                f"< {min_cos}"
+                f"centroid_drift: label {label!r} halves-cosine {cos} < 0.8"
             )
     return {"stale": bool(reasons), "reasons": reasons}
 
@@ -2635,7 +2557,6 @@ def refresh_quantizer(
     vec_col: str = "embedding",
     m: int = 16,
     n_codes: int = 64,
-    iters: int = 3,
     approx_rows: int | None = None,
 ) -> dict:
     """Execute the refresh :func:`quantizer_stale` calls for — the
@@ -2668,7 +2589,7 @@ def refresh_quantizer(
     """
     centroids, books = ivfpq_train(
         corpus, dim, id_col=id_col, vec_col=vec_col,
-        m=m, n_codes=n_codes, iters=iters, approx_rows=approx_rows,
+        m=m, n_codes=n_codes, approx_rows=approx_rows,
     )
     manifest = save_quantizer_version(
         spark, path, books, centroids=centroids,
@@ -3141,7 +3062,6 @@ def contrastive_pairs(
     label_col: str = "label",
     k_pos: int = 1,
     k_neg: int = 5,
-    round_to: int = 6,
 ) -> DataFrame:
     """Contrastive training-PAIR generation — the labeled dataset an
     InfoNCE/triplet embedding trainer consumes, produced in one pass:
@@ -3179,7 +3099,7 @@ def contrastive_pairs(
             (F.col(label_col) == F.col("query_label"))
             .cast("int")
             .alias("is_positive"),
-            F.round(cosine(F.col(vec_col), F.col("__qvec")), round_to).alias(
+            F.round(cosine(F.col(vec_col), F.col("__qvec")), 6).alias(
                 "cos_sim"
             ),
         )

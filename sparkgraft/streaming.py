@@ -164,11 +164,11 @@ def windowed_event_counts(
     stream: DataFrame,
     ts_col: str = "ts",
     window: str = "1 hour",
-    watermark: str = "1 day",
     group_cols: Sequence[str] = ("event_type",),
 ) -> DataFrame:
-    """Tumbling-window event counts + value sums with late-data bound."""
-    s = _with_event_time(stream, ts_col).withWatermark("__event_time", watermark)
+    """Tumbling-window event counts + value sums with a 1-day late-data
+    bound."""
+    s = _with_event_time(stream, ts_col).withWatermark("__event_time", "1 day")
     return (
         s.groupBy(F.window("__event_time", window).alias("win"), *group_cols)
         .agg(
@@ -399,9 +399,9 @@ def run_stream_foreach_batch(
     stream_df: DataFrame,
     batch_fn,
     checkpoint_dir: str,
-    output_mode: str = "append",
 ) -> int:
-    """Drive a (bounded) stream through ``foreachBatch`` to completion:
+    """Drive a (bounded) stream through ``foreachBatch`` to completion,
+    in append mode:
     ``batch_fn(batch_df, batch_id)`` runs once per micro-batch with a
     BATCH DataFrame — the escape hatch for sinks Structured Streaming
     lacks (merge/upsert targets, multi-table writes, JDBC). The
@@ -415,7 +415,7 @@ def run_stream_foreach_batch(
         batch_fn(batch_df, batch_id)
 
     q = (
-        stream_df.writeStream.outputMode(output_mode)
+        stream_df.writeStream.outputMode("append")
         .foreachBatch(_wrapped)
         .option("checkpointLocation", checkpoint_dir)
         .start()

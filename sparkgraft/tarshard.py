@@ -386,7 +386,6 @@ def read_tar_shards(
 def stream_tar_shards(
     spark: SparkSession,
     path: str,
-    verify: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Streaming twin of :func:`read_tar_shards`: the ``binaryFile``
@@ -397,8 +396,8 @@ def stream_tar_shards(
     Batch/stream parity is therefore structural, and asserted over a
     multi-batch replay in tests.  The manifest read is driver-side at
     plan time: a shard added AFTER the stream starts still cracks, but
-    dead-letters under ``verify=True`` until the manifest recommits —
-    exactly the fail-loud contract the batch reader has.
+    dead-letters until the manifest recommits — exactly the fail-loud
+    contract the batch reader has under ``verify=True``.
     """
     schema = (
         "path string, modificationTime timestamp, length long,"
@@ -411,9 +410,7 @@ def stream_tar_shards(
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return _crack_source(
-        _read_manifest(path) if verify else None, reader.load(path)
-    )
+    return _crack_source(_read_manifest(path), reader.load(path))
 
 
 def _read_manifest(path: str) -> dict[str, str]:

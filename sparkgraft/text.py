@@ -288,20 +288,13 @@ PII_PATTERNS: dict[str, str] = {
 }
 
 
-def redact_pii(
-    text: Column | str, kinds: tuple[str, ...] | None = None
-) -> Column:
+def redact_pii(text: Column | str) -> Column:
     """Replace each PII match with ``<KIND>`` (e.g. ``<EMAIL>``) —
     chained ``regexp_replace``, one linear pass per pattern, pure JVM
     codegen. Order matters: SSN/phone run before the bare digit-run
-    card pattern so their hyphenated forms aren't half-eaten.
-    ``kinds=None`` means all patterns; an explicit empty collection
-    means redact nothing (dynamic kind lists must not silently widen
-    to everything)."""
+    card pattern so their hyphenated forms aren't half-eaten."""
     out = _col(text)
-    if kinds is None:
-        kinds = ("email", "ssn", "phone", "ipv4", "card")
-    for kind in kinds:
+    for kind in ("email", "ssn", "phone", "ipv4", "card"):
         out = F.regexp_replace(out, PII_PATTERNS[kind], f"<{kind.upper()}>")
     return out
 
@@ -328,13 +321,6 @@ GOPHER_STOP: tuple[str, ...] = (
 def gopher_rules(
     text: Column | str,
     min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_len: float = 3.0,
-    max_mean_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    max_bullet_frac: float = 0.9,
-    max_ellipsis_frac: float = 0.3,
-    min_alpha_frac: float = 0.8,
     min_stop_hits: int = 2,
 ) -> dict[str, Column]:
     """The Gopher document-quality heuristics (Rae et al. 2021,
@@ -342,7 +328,11 @@ def gopher_rules(
     band, mean-word-length band, ``#``/``...`` symbol-to-word ratio,
     bullet-start and ellipsis-end line fractions, alphabetic-word
     fraction, and the required-stopword presence check — plus ``keep``,
-    the conjunction. This is the standard doc-level gate a pretraining
+    the conjunction. Thresholds are the paper's: ``min_words`` to
+    100,000 words, mean word length in [3, 10], symbol ratio <= 0.1,
+    at most 90% bullet lines and 30% ellipsis lines, at least 80%
+    alphabetic words, and ``min_stop_hits`` stopwords. This is the
+    standard doc-level gate a pretraining
     pipeline runs between lang-id and dedup; every signal is a pure
     row-local expression (HOFs + length arithmetic, no regex
     backtracking, no shuffle), so the gate costs one scan at any scale.
@@ -406,14 +396,14 @@ def gopher_rules(
     ).cast("bigint")
     nn = lambda c: F.coalesce(c, F.lit(False))  # noqa: E731  empty doc -> false
     rules = {
-        "r_word_count": nn((n_words >= min_words) & (n_words <= max_words)),
+        "r_word_count": nn((n_words >= min_words) & (n_words <= 100_000)),
         "r_mean_word_len": nn(
-            (mean_word_len >= min_mean_len) & (mean_word_len <= max_mean_len)
+            (mean_word_len >= 3.0) & (mean_word_len <= 10.0)
         ),
-        "r_symbol_ratio": nn(symbol_ratio <= max_symbol_ratio),
-        "r_bullet_lines": nn(bullet_frac <= max_bullet_frac),
-        "r_ellipsis_lines": nn(ellipsis_frac <= max_ellipsis_frac),
-        "r_alpha_words": nn(alpha_frac >= min_alpha_frac),
+        "r_symbol_ratio": nn(symbol_ratio <= 0.1),
+        "r_bullet_lines": nn(bullet_frac <= 0.9),
+        "r_ellipsis_lines": nn(ellipsis_frac <= 0.3),
+        "r_alpha_words": nn(alpha_frac >= 0.8),
         "r_stopwords": nn(stop_hits >= min_stop_hits),
     }
     keep = F.lit(True)
@@ -437,12 +427,10 @@ C4_BAD_SUBSTRINGS: tuple[str, ...] = ("lorem ipsum", "javascript")
 C4_TERMINAL: tuple[str, ...] = (".", "!", "?", '"')
 
 
-def c4_line_filter(
-    text: Column | str, min_line_words: int = 5
-) -> dict[str, Column]:
+def c4_line_filter(text: Column | str) -> dict[str, Column]:
     """C4-style LINE-level cleaning (Raffel et al. 2020,
     arXiv:1910.10683 §2.2): keep a line iff it (1) ends in terminal
-    punctuation, (2) has at least ``min_line_words`` whitespace words,
+    punctuation, (2) has at least 5 whitespace words,
     (3) contains no curly brace (code/boilerplate marker), and (4)
     contains none of ``C4_BAD_SUBSTRINGS`` case-insensitively; the
     document is REBUILT from surviving lines. The complement of the
@@ -475,7 +463,7 @@ def c4_line_filter(
         clean = ~low.contains("{") & ~low.contains("}")
         for bad in C4_BAD_SUBSTRINGS:
             clean = clean & ~low.contains(bad)
-        return punct_ok & (n_w >= min_line_words) & clean
+        return punct_ok & (n_w >= 5) & clean
 
     kept = F.filter(lines, _ok)
     return {
@@ -490,7 +478,6 @@ def tfidf_top_terms(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 5,
-    persist_intermediates: bool = True,
 ) -> "DataFrame":  # noqa: F821
     """Top-``k`` terms per document by tf-idf (SURVEY §7.1's tf-idf
     text analysis): ``tf = count(term in doc) / len(doc)``, smoothed
@@ -514,18 +501,16 @@ def tfidf_top_terms(
     combined dfreq exchange; term-frequency skew lands only in the
     pre-combined dfreq aggregation, never in a window.
 
-    ``persist_intermediates`` caches the compact (doc, term, count)
-    table: it feeds TWO consumers (the scored rows and the per-term
-    docfreqs); uncached, each branch re-runs tokenize + explode +
-    count over the corpus. Same discipline and memory note as
-    jaccard_pairs — disable if the distinct (doc, term) table exceeds
-    cluster memory+disk cache.
+    The compact (doc, term, count) table is cached: it feeds TWO
+    consumers (the scored rows and the per-term docfreqs); uncached,
+    each branch re-runs tokenize + explode + count over the corpus.
+    Same discipline as jaccard_pairs.
 
     Returns ``(doc_id, rank, term, tfidf)``.
     """
     from pyspark.sql import Window
 
-    from .relational import spread
+    from .relational import materialize_intermediate, spread
 
     toks = spread(df.select(F.col(id_col).alias("doc_id"), text_col)).select(
         "doc_id", tokens(text_col).alias("__tok")
@@ -534,16 +519,13 @@ def tfidf_top_terms(
         "doc_id", F.explode_outer("__tok").alias("term")
     ).where(F.col("term").isNotNull())
     tc = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("__tf_raw"))
-    if persist_intermediates:
-        from .relational import materialize_intermediate
-
-        # eager=False (r14, VERDICT r13 #1): this intermediate is ONE
-        # map-side-combined aggregate with exactly two consumers; the
-        # driver's quiet 8-core bench showed the r13 eager checkpoint
-        # costing more than the cold-cache race it removes
-        # (tfidf_top_terms 1.19→1.60s at sf0.1). Lazy persist restores
-        # the benched-green pre-r13 behavior.
-        tc = materialize_intermediate(tc, eager=False)
+    # eager=False (r14, VERDICT r13 #1): this intermediate is ONE
+    # map-side-combined aggregate with exactly two consumers; the
+    # driver's quiet 8-core bench showed the r13 eager checkpoint
+    # costing more than the cold-cache race it removes
+    # (tfidf_top_terms 1.19→1.60s at sf0.1). Lazy persist restores the
+    # benched-green pre-r13 behavior.
+    tc = materialize_intermediate(tc, eager=False)
     dfreq = tc.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
     n_docs = df.select(F.count(F.lit(1)).alias("__n_docs"))
     wd = Window.partitionBy("doc_id")
@@ -582,7 +564,6 @@ def importance_llr(
     target_df: "DataFrame",  # noqa: F821
     text_col: str = "text",
     id_col: str = "doc_id",
-    persist_intermediates: bool = True,
 ) -> "DataFrame":  # noqa: F821
     """DSIR-style importance weighting (Xie et al. 2023,
     arXiv:2302.03169), reduced to its unigram term: per document, the
@@ -607,7 +588,7 @@ def importance_llr(
     slice; T/V for both models ride broadcast one-row aggregates; the
     scoring joins are term-keyed over the compact count table.
     """
-    from .relational import spread
+    from .relational import materialize_intermediate, spread
 
     def term_counts(src):
         toks = spread(
@@ -620,14 +601,10 @@ def importance_llr(
             F.count(F.lit(1)).alias("__tf")
         )
 
-    tc = term_counts(df)
-    if persist_intermediates:
-        from .relational import materialize_intermediate
-
-        # tc feeds the raw-model totals AND the scoring join; eager +
-        # lineage-truncating (r13) — the totals run as concurrent
-        # broadcast futures and raced the cold cache
-        tc = materialize_intermediate(tc)
+    # tc feeds the raw-model totals AND the scoring join; eager +
+    # lineage-truncating (r13) — the totals run as concurrent broadcast
+    # futures and raced the cold cache
+    tc = materialize_intermediate(term_counts(df))
     raw_ctf = tc.groupBy("term").agg(F.sum("__tf").alias("__rctf"))
     tgt_ctf = term_counts(target_df).groupBy("term").agg(
         F.sum("__tf").alias("__tctf")
@@ -816,7 +793,6 @@ def unigram_logprob(
     text_col: str = "text",
     id_col: str = "doc_id",
     model_df: "DataFrame | None" = None,  # noqa: F821
-    persist_intermediates: bool = True,
 ) -> "DataFrame":  # noqa: F821
     """Per-document mean negative unigram log-probability — the
     perplexity-PROXY quality score (the CCNet/Wikipedia-LM filtering
@@ -862,11 +838,10 @@ def unigram_logprob(
 
     tc = term_counts(df)
     if model_df is None:
-        if persist_intermediates:
-            from .relational import materialize_intermediate
+        from .relational import materialize_intermediate
 
-            # tc feeds both the model totals and the scoring join
-            tc = materialize_intermediate(tc)
+        # tc feeds both the model totals and the scoring join
+        tc = materialize_intermediate(tc)
         model_tc = tc
     else:
         model_tc = term_counts(model_df)
@@ -1089,7 +1064,6 @@ def bigram_logprob(
     text_col: str = "text",
     id_col: str = "doc_id",
     model_df: "DataFrame | None" = None,  # noqa: F821
-    persist_intermediates: bool = True,
 ) -> "DataFrame":  # noqa: F821
     """Per-document mean negative BIGRAM log-probability — the
     context-aware upgrade of :func:`unigram_logprob`: a document of
@@ -1142,10 +1116,9 @@ def bigram_logprob(
 
     doc_bg = bigram_counts(df)
     if model_df is None:
-        if persist_intermediates:
-            from .relational import materialize_intermediate
+        from .relational import materialize_intermediate
 
-            doc_bg = materialize_intermediate(doc_bg)
+        doc_bg = materialize_intermediate(doc_bg)
         model_bg = doc_bg
     else:
         model_bg = bigram_counts(model_df)
@@ -1217,16 +1190,14 @@ def hash_embed(
     df: "DataFrame",  # noqa: F821
     text_col: str = "text",
     id_col: str = "doc_id",
-    dim: int = 64,
-    round_to: int = 6,
 ) -> "DataFrame":  # noqa: F821
     """Feature-hashing text embedder (HashingTF + sign trick +
-    L2-normalize — Weinberger et al. 2009): each token hashes to a
-    dimension and a ±1 sign, signed counts accumulate per dimension,
-    and the vector normalizes to unit length. The model-free bridge
-    from text into EVERY vector operator here (cosine_topk,
-    cosine_pairs_lsh, SemDeDup, pca_whiten, rrf_fuse) — no external
-    embedding model, no Python in the plan.
+    L2-normalize — Weinberger et al. 2009): each token hashes to one of
+    64 dimensions (``dim`` below) and a ±1 sign, signed counts
+    accumulate per dimension, and the vector normalizes to unit length.
+    The model-free bridge from text into EVERY vector operator here
+    (cosine_topk, cosine_pairs_lsh, SemDeDup, pca_whiten, rrf_fuse) —
+    no external embedding model, no Python in the plan.
 
     Shape: one md5 pass per token computes (dimension, sign) pairs,
     then TWO COMPACT INTEGER shuffles — a (doc, dim) signed-count
@@ -1240,7 +1211,7 @@ def hash_embed(
     measured trade documented at np_cosine. md5 is the repo-wide hash
     convention precisely so an external SQL engine reproduces every
     coordinate byte-for-byte (signed counts are exact integers; only
-    the final normalize is float, rounded to ``round_to``).
+    the final normalize is float, rounded to 6 places).
 
     Sign balance: hex digit 9 of the token's md5 — '0'-'7' maps to +1,
     '8'-'f' to -1, an exact 50/50 split, which makes the estimator
@@ -1248,16 +1219,16 @@ def hash_embed(
     no tokens (or full sign cancellation, norm 0) are absent from the
     output, like every gate here.
 
-    Returns (id_col, embedding: array<double> of length ``dim``).
+    Returns (id_col, embedding: array<double> of length 64).
     """
-    cells = _hash_cells(df, text_col, id_col, dim)
+    cells = _hash_cells(df, text_col, id_col, 64)
     dense = cells.groupBy(id_col).agg(
         F.map_from_entries(
             F.collect_list(F.struct(F.col("__d"), F.col("__v")))
         ).alias("__m")
     )
     raw = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
+        F.sequence(F.lit(0), F.lit(63)),
         lambda i: F.coalesce(
             F.element_at(F.col("__m"), i.cast("long")), F.lit(0).cast("long")
         ),
@@ -1277,7 +1248,7 @@ def hash_embed(
             id_col,
             F.transform(
                 F.col("__raw"),
-                lambda v: F.round(v.cast("double") / F.col("__n"), round_to),
+                lambda v: F.round(v.cast("double") / F.col("__n"), 6),
             ).alias("embedding"),
         )
     )
@@ -1287,8 +1258,6 @@ def hash_embed_long(
     df: "DataFrame",  # noqa: F821
     text_col: str = "text",
     id_col: str = "doc_id",
-    dim: int = 64,
-    round_to: int = 6,
 ) -> "DataFrame":  # noqa: F821
     """:func:`hash_embed` in LONG form — (id_col, pos, v) scalars, one
     row per (document, dimension) — without ever building the per-row
@@ -1304,7 +1273,7 @@ def hash_embed_long(
     per-row value is one codegen map lookup + divide. No higher-order
     functions anywhere in the plan.
     """
-    cells = _hash_cells(df, text_col, id_col, dim)
+    cells = _hash_cells(df, text_col, id_col, 64)
     dense = cells.groupBy(id_col).agg(
         F.map_from_entries(
             F.collect_list(F.struct(F.col("__d"), F.col("__v")))
@@ -1319,7 +1288,7 @@ def hash_embed_long(
             id_col,
             "__m",
             "__n",
-            F.explode(F.sequence(F.lit(0), F.lit(dim - 1))).alias("pos"),
+            F.explode(F.sequence(F.lit(0), F.lit(63))).alias("pos"),
         )
         .select(
             id_col,
@@ -1330,7 +1299,7 @@ def hash_embed_long(
                     F.lit(0).cast("long"),
                 ).cast("double")
                 / F.col("__n"),
-                round_to,
+                6,
             ).alias("v"),
         )
     )
@@ -1342,9 +1311,6 @@ def bm25_topk(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    round_to: int = 6,
     max_df_ratio: float | None = 0.5,
 ) -> "DataFrame":  # noqa: F821
     """Okapi BM25 top-``k`` retrieval (Robertson & Walker 1994) — the
@@ -1352,7 +1318,8 @@ def bm25_topk(
     Jaccard arm (set overlap, no term weighting) and the vector arms:
     per query document, score every corpus document sharing a term by
     ``sum_t idf(t) * tf * (k1+1) / (tf + k1 * (1 - b + b * dl/avgdl))``
-    with ``idf = ln(1 + (N - df + 0.5) / (df + 0.5))``.
+    with ``idf = ln(1 + (N - df + 0.5) / (df + 0.5))`` and the standard
+    ``k1 = 1.2``, ``b = 0.75``.
 
     Scale shape: ONE tokenize pass feeds term frequencies, document
     lengths, and document frequencies (all map-side-combinable
@@ -1365,7 +1332,7 @@ def bm25_topk(
     Determinism across engines: each per-term contribution rounds to
     12 decimals (absorbing libm ``ln`` ulp differences, the cosine
     convention) and accumulates in exact DECIMAL; the final score
-    rounds to ``round_to`` and ranks with the id tiebreak.
+    rounds to 6 places and ranks with the id tiebreak.
 
     ``query_ids`` is a one-column (id_col) frame selecting the query
     documents from ``df``. Returns (query_id, id_col, bm25_score,
@@ -1384,8 +1351,8 @@ def bm25_topk(
     and the ranking among them is rank-neutral by construction (the
     naive alternative, dropping hot terms from scoring, measurably
     reorders top-10s: a df/N = 0.5 term still carries idf = ln 2 —
-    see tools/bm25_skew_probe.py, which scans thresholds on a planted
-    Zipfian corpus; the probe also quantifies the one semantic
+    see BENCH_NOTES.md rounds 8-9, the threshold scan on a planted
+    Zipfian corpus; that probe also quantifies the one semantic
     difference, documents sharing ONLY above-threshold terms with the
     query, which score far below any content-term match). Scoring
     joins the candidate pairs back map-side (broadcast — the pair set
@@ -1411,9 +1378,6 @@ def bm25_topk(
         query_ids,
         id_col=id_col,
         k=k,
-        k1=k1,
-        b=b,
-        round_to=round_to,
         max_df_ratio=max_df_ratio,
     )
 
@@ -1467,9 +1431,6 @@ def bm25_topk_from_index(
     query_ids: "DataFrame",  # noqa: F821
     id_col: str = "doc_id",
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    round_to: int = 6,
     max_df_ratio: float | None = 0.5,
 ) -> "DataFrame":  # noqa: F821
     """Score and rank against a (possibly folded) :func:`bm25_index`
@@ -1554,6 +1515,7 @@ def bm25_topk_from_index(
         F.lit(1.0)
         + (F.col("__n") - F.col("__df") + 0.5) / (F.col("__df") + 0.5)
     )
+    k1, b = 1.2, 0.75  # the standard Okapi constants
     tfnorm = (
         F.col("__tf")
         * (k1 + 1.0)
@@ -1655,7 +1617,7 @@ def bm25_topk_from_index(
         )
     scored = (
         hits.groupBy("query_id", id_col)
-        .agg(F.round(F.sum("__contrib").cast("double"), round_to).alias("bm25_score"))
+        .agg(F.round(F.sum("__contrib").cast("double"), 6).alias("bm25_score"))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("bm25_score"), F.asc(id_col)

@@ -56,17 +56,17 @@ def build_http_response(
     status: int = 200,
     body: bytes = b"",
     content_type: str = "text/html",
-    reason: str = "OK",
     content_encoding: str | None = None,
     chunked: bool = False,
     chunk_size: int = 64,
     extra_headers: list[tuple[str, str]] | None = None,
 ) -> bytes:
-    """HTTP/1.1 response bytes (status line + headers + CRLF CRLF +
-    body) — what a WARC ``response`` record's block carries. ``body``
-    is the PLAIN payload; the builder applies the wire encodings the
-    decode tier must undo (r13, VERDICT r12 #1 — real crawl bodies are
-    mostly gzip and/or chunked): ``content_encoding`` compresses it
+    """HTTP/1.1 response bytes (status line with reason phrase ``OK``
+    for every status + headers + CRLF CRLF + body) — what a WARC
+    ``response`` record's block carries. ``body`` is the PLAIN
+    payload; the builder applies the wire encodings the decode tier
+    must undo (r13, VERDICT r12 #1 — real crawl bodies are mostly gzip
+    and/or chunked): ``content_encoding`` compresses it
     (``gzip``/``deflate``) and stamps the header; ``chunked`` frames
     it into ``chunk_size``-byte chunks with a ``Transfer-Encoding:
     chunked`` header and NO Content-Length (RFC 9112 §6.2: a sender
@@ -81,7 +81,7 @@ def build_http_response(
             body = _zlib.compress(body)
         else:
             raise ValueError(f"builder: unsupported {content_encoding!r}")
-    head = f"HTTP/1.1 {status} {reason}\r\n".encode("ascii")
+    head = f"HTTP/1.1 {status} OK\r\n".encode("ascii")
     head += f"Content-Type: {content_type}\r\n".encode("ascii")
     for k, v in extra_headers or []:
         head += f"{k}: {v}\r\n".encode("ascii")
@@ -104,19 +104,19 @@ def build_warc_record(
     warc_type: str,
     payload: bytes,
     url: str | None = None,
-    record_id: str = "<urn:uuid:00000000-0000-0000-0000-000000000000>",
-    date: str = "2024-01-01T00:00:00Z",
     content_type: str = "application/http; msgtype=response",
 ) -> bytes:
     """One WARC/1.0 record: version line, named headers, blank line,
-    Content-Length-framed block, two CRLFs (ISO 28500 §4). The writer
+    Content-Length-framed block, two CRLFs (ISO 28500 §4), with a fixed
+    all-zero record id and date so fixture bytes are reproducible. The
+    writer
     side of the seam — unit tests and planted oracle fixtures build
     REAL bytes with it, the same convention as ``jpeg_encode_*`` /
     ``exif_app1``."""
     headers = [
         ("WARC-Type", warc_type),
-        ("WARC-Record-ID", record_id),
-        ("WARC-Date", date),
+        ("WARC-Record-ID", "<urn:uuid:00000000-0000-0000-0000-000000000000>"),
+        ("WARC-Date", "2024-01-01T00:00:00Z"),
         ("Content-Length", str(len(payload))),
         ("Content-Type", content_type),
     ]

@@ -84,20 +84,18 @@ def parse_url(url: Column | str) -> dict[str, Column]:
 def url_filter(
     url: Column | str,
     host_blocklist: tuple[str, ...] = DEFAULT_HOST_BLOCKLIST,
-    path_blocklist: tuple[str, ...] = DEFAULT_PATH_BLOCKLIST,
-    max_depth: int = 6,
-    max_params: int = 4,
 ) -> dict[str, Column]:
     """The URL gate: parse + rule booleans + ``keep`` conjunction.
-    Rules: allowed scheme, host not on the blocklist, no blocked path
-    segment, bounded path depth, bounded query-parameter count. A URL
+    Rules: allowed scheme, host not on the blocklist, no path segment
+    in ``DEFAULT_PATH_BLOCKLIST``, path depth <= 6, at most 4 query
+    parameters. A URL
     that fails to parse (empty scheme/host) fails the scheme/host
     rules and is dropped — malformed rows dead-letter through the same
     booleans rather than erroring the scan."""
     p = parse_url(url)
     segs = F.filter(F.split(p["path"], "/"), lambda s: s != "")
     seg_blocked = F.lit(False)
-    for bad in path_blocklist:
+    for bad in DEFAULT_PATH_BLOCKLIST:
         seg_blocked = seg_blocked | F.array_contains(
             F.transform(segs, F.lower), bad
         )
@@ -111,8 +109,8 @@ def url_filter(
         "r_scheme": scheme_ok,
         "r_host": host_ok,
         "r_path": ~seg_blocked,
-        "r_depth": p["path_depth"] <= max_depth,
-        "r_params": p["n_params"] <= max_params,
+        "r_depth": p["path_depth"] <= 6,
+        "r_params": p["n_params"] <= 4,
     }
     keep = F.lit(True)
     for r in rules.values():
@@ -396,7 +394,8 @@ def resolve_url(base: str, ref: str) -> str:
 # per-site dedup rates, host-diversity sampling) groups ccTLD sites
 # correctly instead of merging all of `.co.uk` into one key (the
 # two-label `domain` bug this tier replaces). Swap in the full ~10k-rule
-# list by passing it as `rules=` — the operator is rule-list-agnostic.
+# list by passing it as `rules=` to `registrable_domain` — the operator
+# is rule-list-agnostic.
 # Rule grammar (the PSL spec's): a plain rule matches its exact labels;
 # `*.tail` matches exactly one extra label in front of `tail`; a `!rule`
 # exception cancels a wildcard, making `rule` minus its leftmost label
@@ -539,7 +538,6 @@ def domain_cap_sample(
     host_col: Column | str,
     cap: int,
     id_col: str = "doc_id",
-    rules: tuple[str, ...] = PSL_SNAPSHOT,
     out_col: str = "registrable_domain",
     salt_buckets: int = 16,
 ):
@@ -572,7 +570,7 @@ def domain_cap_sample(
     capped."""
     from pyspark.sql import Window
 
-    rd = registrable_domain(host_col, rules=rules)
+    rd = registrable_domain(host_col)
     order_key = F.md5(F.col(id_col).cast("string"))
     salted = Window.partitionBy(
         out_col, F.pmod(F.hash(F.col(id_col)), F.lit(salt_buckets))

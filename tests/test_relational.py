@@ -17,13 +17,27 @@ def test_top_k_per_group_deterministic(spark):
 
 
 def test_latest_per_group_keeps_ties(spark):
+    """Ties on the max are all kept; a NULL version is never the max;
+    NULL group keys form one group, as rank() over a partition does."""
     df = spark.createDataFrame(
-        [("a", "2.0", "x"), ("a", "2.0", "y"), ("a", "1.0", "z"), ("b", "3.0", "w")],
+        [
+            ("a", "2.0", "x"),
+            ("a", "2.0", "y"),
+            ("a", "1.0", "z"),
+            ("a", None, "n"),
+            ("b", "3.0", "w"),
+            (None, "4.0", "g"),
+        ],
         "grp string, version string, payload string",
     )
     out = R.latest_per_group(df, ["grp"], "version")
     got = {(r.grp, r.version, r.payload) for r in out.collect()}
-    assert got == {("a", "2.0", "x"), ("a", "2.0", "y"), ("b", "3.0", "w")}
+    assert got == {
+        ("a", "2.0", "x"),
+        ("a", "2.0", "y"),
+        ("b", "3.0", "w"),
+        (None, "4.0", "g"),
+    }
 
 
 def test_melt_defaults_to_non_id_columns(spark):
@@ -583,6 +597,6 @@ def test_bench_control_update_guard():
     # contended run (>20% slower best spark canary): refuse
     hot = {"spark_pre": 1.9, "spark_post": 0.55}
     assert not bench.should_update_control(ctl, 0.1, 32, hot)
-    # legacy control without cpus: same-cpus comparison assumed
+    # legacy control without cpus: its core count is unknown, refuse
     legacy = {"sf": 0.1, "canary": {"spark_pre": 0.5, "spark_post": 0.4}}
-    assert bench.should_update_control(legacy, 0.1, 32, quiet)
+    assert not bench.should_update_control(legacy, 0.1, 32, quiet)
